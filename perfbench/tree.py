@@ -14,6 +14,10 @@ a fixed deck so every block of six has the same mix whatever the seed
   inserts rows through ``migrator.run_sql``;
 - ``program`` an executable that exits 0 and writes nothing to stderr.
 
+``add_history`` appends directories that stand for migrations an earlier
+deploy already applied: the workload writes their ledger rows itself, so
+they are never executed, only listed and matched against the ledger.
+
 ``Tree`` remembers every table's expected row count, so the workload can
 check the database against it after each deploy.
 """
@@ -72,6 +76,18 @@ class Tree:
     def add(self, n: int) -> list[str]:
         """Append ``n`` migrations; return their names."""
         return [self._add_one() for _ in range(n)]
+
+    def add_history(self, n: int) -> list[str]:
+        """Append ``n`` already-applied migrations; return their names."""
+        names = []
+        for _ in range(n):
+            name = f"{len(self.names) + 1:04d}-history-{self.rng.choice(WORDS)}"
+            d = os.path.join(self.migrations_dir, name)
+            os.makedirs(d)
+            _write(d, "01-noop.sql", "-- applied by an earlier deploy\n")
+            self.names.append(name)
+            names.append(name)
+        return names
 
     def _add_one(self) -> str:
         kind = self._next_kind()

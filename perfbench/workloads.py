@@ -34,7 +34,13 @@ from tree import LEDGER, Tree
 
 DATABASE = "bench"
 BOOTSTRAP_MIGRATIONS = 6
-BOOTSTRAPS = 2
+# Warm bootstraps of identical trees, each into its own empty database,
+# after a first one that pays the JVM's warm-up for this code path.
+BOOTSTRAPS = 3
+# The deploy database's ledger is seeded with this many already-applied
+# migrations before the deploy loop: the ledger size at which the
+# pending-set read was measured (README.md, "Measured traffic").
+HISTORY_ROWS = 300
 # Every third deploy first appends one or two migrations (the seed picks
 # which, from this deck per pair); the others find nothing pending. More
 # than half of any prefix of the loop is then a no-op deploy, the common
@@ -83,6 +89,11 @@ QUERY_MODULES = (
     "curation",
     "multimodal",
 )
+# The seven ingest substrates the catalog bench fits before its queries
+# (bench.py). The first three are cheap and part of every run's set-up;
+# the four iteration-bound ones are fitted in traced runs only.
+INGEST_FITS = ("tf", "gram", "daywords", "ivf", "bpe", "pq", "cc")
+SETUP_FITS = INGEST_FITS[:3]
 PER_LAYER = (
     *(f"{name}_s" for name in MIGRATE_LAYERS),
     "migrator.ddl.statements",
@@ -98,7 +109,7 @@ PER_LAYER = (
     "spark.jobs",
     "spark.stages",
     "spark.tasks",
-    "ingest.tf_fit_s",
+    *(f"ingest.{name}_fit_s" for name in INGEST_FITS),
     "spark.session_start_s",
     "jvm.live_heap_mb",
     "jvm.peak_rss_mb",
@@ -114,7 +125,7 @@ class Run:
         self.trace = bool(args.trace)
         self.spans_path = args.spans
         self.tracer = Tracer()
-        self.tracer.enabled = self.trace
+        self.tracer.enabled = False  # switched on around each traced operation
         self.attempted = 0
         self.failed = 0
         self.problems: list[str] = []
@@ -172,15 +183,6 @@ class Run:
         }
 
 
-def _start(spark):
-    """Finish session start-up: touch the catalog and run the sentinel job
-    once cold, so metastore creation and the first job's warm-up count as
-    set-up and the sentinel readings taken later are warm."""
-    spark.sql("SHOW DATABASES").collect()
-    sentinel_s(spark)
-    return spark
-
-
 def _timed(fn):
     t0 = time.perf_counter()
     out = fn()
@@ -210,9 +212,10 @@ def _trace_migrator(tracer: Tracer, counts: dict) -> None:
     tracer.wrap(core.Migrator, "_run_program", "migrator.core.program")
 
 
-def _check_database(spark, db: str, tree: Tree, when: str) -> list[str]:
+def _check_database(spark, db: str, tree: Tree, when: str, pending: bool = True) -> list[str]:
     """The ledger holds exactly the tree's migrations, every generated
-    table has its expected row count, and nothing is pending."""
+    table has its expected row count and, when asked, the migrator finds
+    nothing pending."""
     from database_migrator_spark.migrator import Migrator
 
     problems = []
@@ -225,23 +228,50 @@ def _check_database(spark, db: str, tree: Tree, when: str) -> list[str]:
     got = {r["t"]: r["n"] for r in spark.sql(union).collect()}
     if got != tree.rows:
         problems.append(f"{when}: row counts {got} != expected {tree.rows}")
-    pending = Migrator(spark, db, tree.migrations_dir, quiet=True).pending_migrations()
     if pending:
-        problems.append(f"{when}: still pending {[m.name for m in pending]}")
+        left = Migrator(spark, db, tree.migrations_dir, quiet=True).pending_migrations()
+        if left:
+            problems.append(f"{when}: still pending {[m.name for m in left]}")
     return problems
 
 
-def _ledger_on_disk(spark, db: str) -> tuple[int, int]:
+def _ledger_path(spark, db: str) -> str:
     rows = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{LEDGER}").collect()
     location = next(r["data_type"] for r in rows if r["col_name"] == "Location")
-    path = location.removeprefix("file:")
+    return location.removeprefix("file:")
+
+
+def _ledger_on_disk(spark, db: str) -> tuple[int, int]:
     files = n_bytes = 0
-    for root, _dirs, names in os.walk(path):
+    for root, _dirs, names in os.walk(_ledger_path(spark, db)):
         for name in names:
             if not name.startswith((".", "_")):
                 files += 1
                 n_bytes += os.path.getsize(os.path.join(root, name))
     return files, n_bytes
+
+
+def _seed_history(spark, db: str, tree: Tree, n: int, seed: int) -> None:
+    """Give ``db`` the ledger of a long-lived database: append ``n``
+    already-applied migrations to its tree and write their ledger rows in
+    the shape ``CatalogLedger.record`` leaves, one snappy parquet file per
+    row, then refresh the table. Writing the files directly takes well
+    under a second; 300 ``record`` calls would take over a minute."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    path = _ledger_path(spark, db)
+    for name in tree.add_history(n):
+        part = uuid.UUID(int=rng.getrandbits(128))
+        pq.write_table(
+            pa.table({"migration": pa.array([name], pa.string())}),
+            os.path.join(path, f"part-00000-{part}-c000.snappy.parquet"),
+            compression="snappy",
+        )
+    spark.catalog.refreshTable(f"{db}.{LEDGER}")
 
 
 def _migrate_argv(db: str, tree: Tree) -> list[str]:
@@ -254,58 +284,58 @@ def run_migrate(args) -> dict:
     from database_migrator_spark.session import get_session
 
     run = Run(args)
-    # the same builder call cli.main makes, so the CLI reuses this session
-    spark, session_s = _timed(lambda: _start(get_session("spark-migrate", persistent_catalog=True)))
+
+    def start():
+        # the same builder call cli.main makes, so the CLI reuses this
+        # session; the first catalog call opens (and creates) the metastore
+        spark = get_session("spark-migrate", persistent_catalog=True)
+        spark.sql("SHOW DATABASES").collect()
+        return spark
+
+    spark, session_s = _timed(start)
+    run.end_to_end["setup_s"] = session_s
+    run.say("setup_s", session_s, "s", "JVM launch, session build, Hive metastore creation")
     run.phase("session")
     jobs = JobCounter(spark.sparkContext)
     ddl_counts = {"statements": 0, "skipped": 0}
     if args.trace:
         _trace_migrator(run.tracer, ddl_counts)
 
-    trees, reps = [], []
-    for i in range(SETUP_REPEATS):
-        def setup(i=i):
-            t = Tree(os.path.abspath(f"tree{i}"), args.seed)
-            t.add(BOOTSTRAP_MIGRATIONS)
-            return t
-        tree, dt = _timed(setup)
+    trees = []
+    for i in range(1 + BOOTSTRAPS):
+        tree = Tree(os.path.abspath(f"tree{i}"), args.seed)
+        tree.add(BOOTSTRAP_MIGRATIONS)
         trees.append(tree)
-        reps.append(dt)
-    trees = trees[:BOOTSTRAPS]
-    run.end_to_end["setup_s"] = session_s + median(reps)
-    run.say("setup_s", run.end_to_end["setup_s"], "s",
-            f"session {session_s:.4f} s + median of {SETUP_REPEATS} tree set-ups {median(reps):.4f} s")
-    run.phase("setup")
+    run.phase("inputs")
 
-    # two bootstraps of identical trees, each into its own empty database:
-    # the first also pays the JVM's warm-up for this code path (its time is
-    # printed), the second is the one reported
-    boots = []
-    for i, tree in enumerate(trees):
+    def bootstrap(i: int, traced: bool) -> float:
+        run.tracer.enabled = traced
         run.tracer.op = f"bootstrap-{i}"
-        rc, dt = _timed(lambda: cli.main(_migrate_argv(f"{DATABASE}{i}", tree)))
+        rc, dt = _timed(lambda: cli.main(_migrate_argv(f"{DATABASE}{i}", trees[i])))
+        run.tracer.enabled = False
         run.count(rc == 0, f"bootstrap {i} exited {rc}")
-        boots.append(dt)
-    run.tracer.enabled = False
-    run.end_to_end["batch_s"] = boots[-1]
-    run.say("bootstrap_s", boots[-1], "s",
-            f"{BOOTSTRAP_MIGRATIONS} migrations into an empty database; "
-            f"the JVM's first bootstrap took {boots[0]:.4f} s")
-    run.phase("bootstrap")
-    for i, tree in enumerate(trees):
-        run.problems += _check_database(spark, f"{DATABASE}{i}", tree, f"after bootstrap {i}")
-    db = f"{DATABASE}{len(trees) - 1}"
+        return dt
+
+    # the first bootstrap pays the JVM's warm-up, so it is printed, left
+    # untraced and not reported; its database is the one deployed to, with
+    # a ledger of the measured size
+    first_boot = bootstrap(0, False)
+    db, tree = f"{DATABASE}0", trees[0]
+    _seed_history(spark, db, tree, HISTORY_ROWS, args.seed)
+    run.problems += _check_database(spark, db, tree, "after bootstrap 0")
     argv = _migrate_argv(db, tree)
-    run.phase("check")
+    sentinel_s(spark)  # the probe's first run in the JVM is a cold one
     sentinel_before = sentinel_s(spark)
+    run.phase("warm-up")
 
     rng = random.Random(args.seed)
     deck: list[int] = []
     lat: list[float] = []
     lat_by_mode: dict[bool, list[float]] = {False: [], True: []}
     noop_jobs: list[int] = []
-    t_end = time.perf_counter() + args.seconds
-    while not lat or time.perf_counter() < t_end:
+
+    def deploy() -> None:
+        nonlocal deck
         k = 0
         if len(lat) % APPLY_EVERY == APPLY_EVERY - 1:
             if not deck:
@@ -313,7 +343,7 @@ def run_migrate(args) -> dict:
                 rng.shuffle(deck)
             k = deck.pop()
         tree.add(k)
-        traced = args.trace and len(lat) % 2 == 1
+        traced = bool(args.trace) and len(lat) % 2 == 1
         run.tracer.enabled = traced
         run.tracer.op = f"deploy-{len(lat)}"
         with jobs.group("deploy") as counted:
@@ -324,12 +354,34 @@ def run_migrate(args) -> dict:
         if k == 0:
             noop_jobs.append(counted["jobs"])
             lat_by_mode[traced].append(dt)
+
+    # each warm bootstrap is followed by an equal share of the deploy
+    # loop's --seconds, so both metrics sample the whole timed part of the
+    # run, and a slow phase of the machine shorter than that part moves
+    # fewer of the samples each median is taken over
+    boots = []
+    for i in range(1, 1 + BOOTSTRAPS):
+        boots.append(bootstrap(i, bool(args.trace)))
+        while not lat or sum(lat) < args.seconds * i / BOOTSTRAPS:
+            deploy()
+    run.end_to_end["batch_s"] = median(boots)
+    run.say("bootstrap_s", median(boots), "s",
+            f"median of {BOOTSTRAPS} warm bootstraps of {BOOTSTRAP_MIGRATIONS} migrations into "
+            "empty databases: " + ", ".join(f"{b:.4f}" for b in boots)
+            + f" s; the first bootstrap in the JVM took {first_boot:.4f} s")
     run.phase("timed")
     run.problems += _check_database(spark, db, tree, "after the last deploy")
+    # the other databases were bootstrapped from the same tree and not
+    # touched since; the pending set is asked of the deploy database only
+    for i in range(1, 1 + BOOTSTRAPS):
+        run.problems += _check_database(
+            spark, f"{DATABASE}{i}", trees[i], f"after bootstrap {i}", pending=False
+        )
     run.phase("check")
 
     run.end_to_end["op_p50_s"] = median(lat)
-    run.say("deploy_p50_s", median(lat), "s", f"n={len(lat)}, closed loop, one client")
+    run.say("deploy_p50_s", median(lat), "s",
+            f"n={len(lat)}, closed loop, one client, ledger of {len(tree.names)} rows at the end")
     t = tail(lat)
     if t is None:
         run.say("deploy_tail_s", "n/a", "s", f"n={len(lat)} deploys, fewer than 11")
@@ -364,47 +416,76 @@ def _module_of(dq) -> str:
     return dq.build.__module__.removeprefix("database_migrator_spark.").removeprefix("operators.")
 
 
+def _ingest_fits() -> dict:
+    """The ingest fits by short name, called as ``bench.py`` calls them.
+    Each caches its substrate per data directory (and session), so a fit
+    on a fresh directory does the whole work."""
+    from database_migrator_spark.operators.bitmapops import day_user_words
+    from database_migrator_spark.operators.bpe import bpe_train_cached
+    from database_migrator_spark.operators.dedup import neardup_components_cached
+    from database_migrator_spark.operators.similarity import _ivf_index_cached, pq_fit_cached
+    from database_migrator_spark.operators.textops import doc_shingles_cached, doc_term_frequencies
+
+    return {
+        "tf": doc_term_frequencies,
+        "gram": doc_shingles_cached,
+        "daywords": day_user_words,
+        "ivf": _ivf_index_cached,
+        "bpe": lambda spark, sf_dir: bpe_train_cached(spark, sf_dir, 10),
+        "pq": pq_fit_cached,
+        "cc": neardup_components_cached,
+    }
+
+
 def run_queries(args) -> dict:
     import duckdb
 
-    from database_migrator_spark.operators.textops import doc_term_frequencies
     from database_migrator_spark.plans.registry import all_queries
     from database_migrator_spark.session import get_session
-    from tests.conftest import _normalize, register_duck_views
+    from tests.conftest import assert_matches_oracle
 
     run = Run(args)
-    spark, session_s = _timed(lambda: _start(get_session("perfbench")))
+    spark, session_s = _timed(lambda: get_session("perfbench"))
     run.phase("session")
     catalog = all_queries()
     queries = {n: catalog[n] for n in QUERIES}
+    fits = _ingest_fits()
 
-    # set-up: generate the tables and fit the term-frequency substrate the
-    # textops query reads (it caches per directory, so each repetition
-    # does the full work)
-    reps, fit_s = [], []
-    for i in range(SETUP_REPEATS):
-        t0 = time.perf_counter()
-        sf_dir = os.path.abspath(f"data{i}")
-        datagen.generate(sf_dir, args.seed, SF)
-        _, dt = _timed(lambda: doc_term_frequencies(spark, sf_dir))
-        fit_s.append(dt)
-        reps.append(time.perf_counter() - t0)
-    run.end_to_end["setup_s"] = session_s + median(reps)
-    run.say("setup_s", run.end_to_end["setup_s"], "s",
-            f"session {session_s:.4f} s + median of {SETUP_REPEATS} input set-ups {median(reps):.4f} s")
-    run.per_layer["ingest.tf_fit_s"] = median(fit_s)
+    # inputs, outside every timer: one directory per set-up repetition;
+    # the queries read the first one
+    dirs = [os.path.abspath(f"data{i}") for i in range(SETUP_REPEATS)]
+    for d in dirs:
+        datagen.generate(d, args.seed, SF)
+    sf_dir = dirs[0]
+    run.phase("inputs")
+
+    # set-up: each repetition fits the set-up substrates on its own
+    # directory. The first, before the queries, pays the JVM's warm-up,
+    # so the median is a warm repetition; the others run later (below).
+    fit_s: dict[str, list[float]] = defaultdict(list)
+    reps: list[float] = []
+
+    def fit_setup(d: str) -> None:
+        for k in SETUP_FITS:
+            fit_s[k].append(_timed(lambda: fits[k](spark, d))[1])
+        reps.append(sum(fit_s[k][-1] for k in SETUP_FITS))
+
+    fit_setup(sf_dir)
+    if args.trace:
+        # the iteration-bound fits, once each (about 25 s on 4 cores)
+        for k in INGEST_FITS[len(SETUP_FITS):]:
+            fit_s[k].append(_timed(lambda: fits[k](spark, sf_dir))[1])
     run.phase("setup")
 
-    # untimed verification pass against the DuckDB oracle; it also warms
-    # every query's code paths before timing starts
+    # untimed verification pass against the DuckDB oracle (column names,
+    # row count and normalised values, as the test suite compares them);
+    # it also warms every query's code paths before timing starts
     con = duckdb.connect()
-    register_duck_views(con, sf_dir)
     for name, dq in queries.items():
         try:
-            got = _normalize(dq.build(spark, sf_dir).toPandas())
-            want = _normalize(con.execute(dq.oracle).fetchdf())
-            run.count(got == want, f"{name}: result differs from the DuckDB oracle")
-        except Exception as e:  # a query that raises counts as failed
+            assert_matches_oracle(spark, con, dq, sf_dir)
+            run.count(True, name)
+        except Exception as e:  # a mismatch or a query that raises counts as failed
             run.count(False, f"{name}: {type(e).__name__}: {str(e)[:200]}")
     con.close()
     run.phase("check")
@@ -414,7 +495,7 @@ def run_queries(args) -> dict:
     rng = random.Random(args.seed)
     lat: dict[str, list[float]] = defaultdict(list)
 
-    def execute(name: str, record: bool = True) -> tuple[float, dict]:
+    def execute(name: str) -> tuple[float, dict]:
         dq = queries[name]
         with jobs.group(name) as counted:
             t0 = time.perf_counter()
@@ -430,8 +511,7 @@ def run_queries(args) -> dict:
                 print(f"{name}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
             dt = time.perf_counter() - t0
         run.count(ok, f"{name} raised")
-        if record:
-            lat[name].append(dt)
+        lat[name].append(dt)
         return dt, counted
 
     def shuffled() -> list[str]:
@@ -439,12 +519,11 @@ def run_queries(args) -> dict:
         rng.shuffle(order)
         return order
 
-    # one untimed pass through the noop sink: the first executions of that
-    # action are much slower than the later ones (JIT), and would swamp them
-    for name in shuffled():
-        execute(name, record=False)
-    run.phase("warm")
+    # the verification pass compiled every query's plan; the probe, run
+    # twice, also warms the noop sink the timed executions write to
+    sentinel_s(spark)
     sentinel_before = sentinel_s(spark)
+    run.phase("warm")
 
     if args.trace:
         # two passes; each query runs traced in one and untraced in the
@@ -463,17 +542,32 @@ def run_queries(args) -> dict:
                     for k in counts:
                         counts[k] += counted[k]
         tracer.enabled = False
+        for d in dirs[1:]:
+            fit_setup(d)
     else:
         # closed loop, one client: passes in a fresh order each time, until
-        # the time is up and every query has run at least once
-        t_end = time.perf_counter() + args.seconds
+        # --seconds of executions are done and every query has run at
+        # least once. The remaining set-up repetitions split the loop into
+        # equal chunks, so both the per-query best and the set-up median
+        # sample the whole timed part of the run, and a slow phase of the
+        # machine shorter than that part moves fewer of their samples.
         order: list[str] = []
-        while len(lat) < len(queries) or time.perf_counter() < t_end:
-            if not order:
-                order = shuffled()
-            execute(order.pop())
+        spent = 0.0
+        for i in range(1, len(dirs) + 1):
+            while spent < args.seconds * i / len(dirs) or (i == len(dirs) and len(lat) < len(queries)):
+                if not order:
+                    order = shuffled()
+                spent += execute(order.pop())[0]
+            if i < len(dirs):
+                fit_setup(dirs[i])
 
     run.phase("timed")
+    run.end_to_end["setup_s"] = session_s + median(reps)
+    run.say("setup_s", run.end_to_end["setup_s"], "s",
+            f"session {session_s:.4f} s + median of {SETUP_REPEATS} fits of "
+            f"{'+'.join(SETUP_FITS)}: " + ", ".join(f"{r:.4f}" for r in reps) + " s")
+    for k, ts in fit_s.items():
+        run.per_layer[f"ingest.{k}_fit_s"] = median(ts)
     # each query's best timed execution: interference from the rest of the
     # machine only ever adds time, so the minimum is the steadiest estimate
     # (the catalog bench reports best-of-2 for the same reason)
