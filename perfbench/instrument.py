@@ -4,6 +4,8 @@
   points, installed by patching module attributes from the benchmark side.
 - ``JobCounter``: exact Spark job / stage / task counts for a block of
   work, read through ``setJobGroup`` and ``statusTracker()``.
+- ``ProgramCpu``: CPU seconds used by the program's processes, the
+  quantity every gated timing is taken in.
 - ``sentinel_s``: a constant probe job, timed before and after each run
   so a slow-VM phase shows in-band.
 - ``jvm_peak_rss_mb``: the driver JVM's ``VmHWM``.
@@ -15,6 +17,7 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 import statistics
 import time
 from collections import defaultdict
@@ -150,6 +153,64 @@ class JobCounter:
                 if info is not None and info.numCompletedTasks > 0:
                     out["stages"] += 1
                     out["tasks"] += info.numCompletedTasks
+
+
+class ProgramCpu:
+    """CPU seconds the program has used: every thread of every process in
+    this process's session (the Python driver, the driver JVM, the Python
+    workers it starts), plus what their reaped children used, except the
+    JVM's JIT compiler threads.
+
+    Wall time on a shared VM moves with the load of other guests: on a
+    4 vCPU KVM guest the same Spark job took 0.13 s while the host was
+    quiet and 0.2-0.3 s while other guests stole 10-20% of the VM's CPU,
+    and whole one-minute runs read 1.5-2x slower than others. CPU time is
+    charged only while a thread runs, so steal does not add to it (cache
+    and memory contention from other guests still do, less). The JIT compiler threads are left out
+    because their share is compilation, not the program's work, and decays
+    for minutes after the JVM starts (from half of the JVM's CPU per job
+    to a tenth), faster or slower with the host's speed.
+
+    Live threads are read from ``schedstat`` (nanoseconds); reaped children
+    from ``cutime``/``cstime`` (clock ticks).
+    """
+
+    _CLK = os.sysconf("SC_CLK_TCK")
+
+    def __init__(self) -> None:
+        self.sid = os.getsid(0)
+        self._compiler: dict[str, bool] = {}  # task dir -> is a JIT compiler thread
+
+    def _is_compiler(self, task_dir: str) -> bool:
+        hit = self._compiler.get(task_dir)
+        if hit is None:
+            with open(f"{task_dir}/comm", encoding="utf-8", errors="replace") as f:
+                name = f.read()
+            # "C1 CompilerThre", "C2 CompilerThre" (names are cut at 15 chars)
+            hit = self._compiler[task_dir] = name.startswith(("C1 Compiler", "C2 Compiler"))
+        return hit
+
+    def read(self) -> float:
+        ns = ticks = 0
+        for pid in os.listdir("/proc"):
+            if not pid.isdigit():
+                continue
+            try:
+                with open(f"/proc/{pid}/stat", encoding="ascii") as f:
+                    stat = f.read()
+                fields = stat[stat.rfind(")") + 2:].split()
+                if int(fields[3]) != self.sid:
+                    continue
+                ticks += int(fields[13]) + int(fields[14])  # cutime, cstime
+                for tid in os.listdir(f"/proc/{pid}/task"):
+                    task = f"/proc/{pid}/task/{tid}"
+                    if self._is_compiler(task):
+                        continue
+                    with open(f"{task}/schedstat", encoding="ascii") as f:
+                        ns += int(f.read().split()[0])
+            except (OSError, ValueError, IndexError):
+                continue  # the process or thread ended while being read
+        return ns / 1e9 + ticks / self._CLK
 
 
 def sentinel_s(spark) -> float:

@@ -39,22 +39,41 @@ def machine_sizing() -> tuple[int, str]:
     return cpus, f"{min(DRIVER_MEM_CAP_MB, phys_mb // 4)}m"
 
 
-def _stop_group(child: subprocess.Popen) -> None:
-    """Kill what is left of the child's process group (the JVM and Python
-    workers it started) and wait until every member is gone."""
-    pgid = child.pid
-    try:
-        os.killpg(pgid, signal.SIGKILL)
-    except ProcessLookupError:
-        return
-    child.wait()
-    for _ in range(300):
+def _session_members(sid: int) -> list[int]:
+    """Live processes whose session is ``sid``."""
+    pids = []
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
         try:
-            os.killpg(pgid, 0)
-        except ProcessLookupError:
+            with open(f"/proc/{pid}/stat", encoding="ascii") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rfind(")") + 2:].split()
+        if fields[0] != "Z" and int(fields[3]) == sid:  # a zombie has already ended
+            pids.append(int(pid))
+    return pids
+
+
+def _stop_session(child: subprocess.Popen) -> None:
+    """Kill what is left of the child's session (the JVM, and the Python
+    workers, which run in process groups of their own) and wait until
+    every member is gone."""
+    sid = child.pid
+    for _ in range(300):
+        pids = _session_members(sid)
+        for pid in pids:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        if child.returncode is None:
+            child.wait()
+        if not pids:
             return
         time.sleep(0.1)
-    raise RuntimeError(f"processes of group {pgid} did not exit")
+    raise RuntimeError(f"processes of session {sid} did not exit")
 
 
 def main() -> int:
@@ -107,7 +126,7 @@ def main() -> int:
                 rc = child.wait(timeout=DEADLINE_S)
             except subprocess.TimeoutExpired:
                 rc = None
-            _stop_group(child)
+            _stop_session(child)
         with open(out_path) as f:
             sys.stdout.write(f.read())
         if rc != 0 or not os.path.exists(result_path):

@@ -16,6 +16,7 @@ import argparse
 import json
 import os
 import random
+import shutil
 import sys
 import time
 from collections import defaultdict
@@ -23,6 +24,7 @@ from collections import defaultdict
 import datagen
 from instrument import (
     JobCounter,
+    ProgramCpu,
     Tracer,
     jvm_live_heap_mb,
     jvm_peak_rss_mb,
@@ -48,6 +50,9 @@ HISTORY_ROWS = 300
 APPLY_EVERY = 3
 APPLY_DECK = [1, 2]
 SETUP_REPEATS = 3
+# every query runs at least this often in the timed loop, so its best
+# execution is never the first, coldest one alone
+MIN_EXECUTIONS = 2
 SF = 0.01
 
 # A frozen stratified sample of the declared-query catalog (qid <= q310),
@@ -111,6 +116,9 @@ PER_LAYER = (
     "spark.tasks",
     *(f"ingest.{name}_fit_s" for name in INGEST_FITS),
     "spark.session_start_s",
+    "wall.setup_s",
+    "wall.batch_s",
+    "wall.op_p50_s",
     "jvm.live_heap_mb",
     "jvm.peak_rss_mb",
     "env.sentinel_s",
@@ -126,6 +134,7 @@ class Run:
         self.spans_path = args.spans
         self.tracer = Tracer()
         self.tracer.enabled = False  # switched on around each traced operation
+        self.cpu = ProgramCpu()
         self.attempted = 0
         self.failed = 0
         self.problems: list[str] = []
@@ -158,11 +167,13 @@ class Run:
 
     def finish(self, spark, session_s: float, sentinel_before: float) -> dict:
         sentinel_after = sentinel_s(spark)
-        self.per_layer["jvm.live_heap_mb"] = jvm_live_heap_mb(spark)
+        if self.trace:  # a per-layer metric; its full collections take a while
+            self.per_layer["jvm.live_heap_mb"] = jvm_live_heap_mb(spark)
+            self.say("live_heap_mb", self.per_layer["jvm.live_heap_mb"], "MB",
+                     "driver JVM heap after a full GC")
         self.per_layer["jvm.peak_rss_mb"] = jvm_peak_rss_mb(spark)
         self.per_layer["spark.session_start_s"] = session_s
         self.per_layer["env.sentinel_s"] = (sentinel_before + sentinel_after) / 2
-        self.say("live_heap_mb", self.per_layer["jvm.live_heap_mb"], "MB", "driver JVM heap after a full GC")
         self.say("peak_rss_mb", self.per_layer["jvm.peak_rss_mb"], "MB", "driver JVM VmHWM")
         self.say("env.sentinel_s", sentinel_before, "s", f"before; {sentinel_after:.4f} s after")
         rate = self.failed / self.attempted if self.attempted else 1.0
@@ -187,6 +198,13 @@ def _timed(fn):
     t0 = time.perf_counter()
     out = fn()
     return out, time.perf_counter() - t0
+
+
+def _measured(cpu: ProgramCpu, fn):
+    """``fn()``'s result, wall seconds and program CPU seconds."""
+    c0 = cpu.read()
+    out, dt = _timed(fn)
+    return out, dt, cpu.read() - c0
 
 
 # -- migrate -----------------------------------------------------------------
@@ -292,9 +310,11 @@ def run_migrate(args) -> dict:
         spark.sql("SHOW DATABASES").collect()
         return spark
 
-    spark, session_s = _timed(start)
-    run.end_to_end["setup_s"] = session_s
-    run.say("setup_s", session_s, "s", "JVM launch, session build, Hive metastore creation")
+    spark, session_s, session_cpu = _measured(run.cpu, start)
+    run.end_to_end["setup_s"] = session_cpu
+    run.per_layer["wall.setup_s"] = session_s
+    run.say("setup_s", session_cpu, "s", "program CPU of the JVM launch, session build and Hive "
+            f"metastore creation; {session_s:.4f} s wall")
     run.phase("session")
     jobs = JobCounter(spark.sparkContext)
     ddl_counts = {"statements": 0, "skipped": 0}
@@ -308,18 +328,18 @@ def run_migrate(args) -> dict:
         trees.append(tree)
     run.phase("inputs")
 
-    def bootstrap(i: int, traced: bool) -> float:
+    def bootstrap(i: int, traced: bool) -> tuple[float, float]:
         run.tracer.enabled = traced
         run.tracer.op = f"bootstrap-{i}"
-        rc, dt = _timed(lambda: cli.main(_migrate_argv(f"{DATABASE}{i}", trees[i])))
+        rc, dt, cpu = _measured(run.cpu, lambda: cli.main(_migrate_argv(f"{DATABASE}{i}", trees[i])))
         run.tracer.enabled = False
         run.count(rc == 0, f"bootstrap {i} exited {rc}")
-        return dt
+        return dt, cpu
 
     # the first bootstrap pays the JVM's warm-up, so it is printed, left
     # untraced and not reported; its database is the one deployed to, with
     # a ledger of the measured size
-    first_boot = bootstrap(0, False)
+    first_boot, first_boot_cpu = bootstrap(0, False)
     db, tree = f"{DATABASE}0", trees[0]
     _seed_history(spark, db, tree, HISTORY_ROWS, args.seed)
     run.problems += _check_database(spark, db, tree, "after bootstrap 0")
@@ -331,6 +351,7 @@ def run_migrate(args) -> dict:
     rng = random.Random(args.seed)
     deck: list[int] = []
     lat: list[float] = []
+    cpu: list[float] = []
     lat_by_mode: dict[bool, list[float]] = {False: [], True: []}
     noop_jobs: list[int] = []
 
@@ -347,28 +368,34 @@ def run_migrate(args) -> dict:
         run.tracer.enabled = traced
         run.tracer.op = f"deploy-{len(lat)}"
         with jobs.group("deploy") as counted:
-            rc, dt = _timed(lambda: cli.main(argv))
+            rc, dt, dc = _measured(run.cpu, lambda: cli.main(argv))
         run.tracer.enabled = False
         run.count(rc == 0, f"deploy {len(lat)} exited {rc}")
         lat.append(dt)
+        cpu.append(dc)
         if k == 0:
             noop_jobs.append(counted["jobs"])
             lat_by_mode[traced].append(dt)
 
-    # each warm bootstrap is followed by an equal share of the deploy
-    # loop's --seconds, so both metrics sample the whole timed part of the
-    # run, and a slow phase of the machine shorter than that part moves
-    # fewer of the samples each median is taken over
-    boots = []
-    for i in range(1, 1 + BOOTSTRAPS):
-        boots.append(bootstrap(i, bool(args.trace)))
-        while not lat or sum(lat) < args.seconds * i / BOOTSTRAPS:
-            deploy()
-    run.end_to_end["batch_s"] = median(boots)
-    run.say("bootstrap_s", median(boots), "s",
-            f"median of {BOOTSTRAPS} warm bootstraps of {BOOTSTRAP_MIGRATIONS} migrations into "
-            "empty databases: " + ", ".join(f"{b:.4f}" for b in boots)
-            + f" s; the first bootstrap in the JVM took {first_boot:.4f} s")
+    # the warm bootstraps, then the deploy loop: the bootstraps also warm
+    # the code the deploys share with them (the pending set, the catalog)
+    boots = [bootstrap(i, bool(args.trace)) for i in range(1, 1 + BOOTSTRAPS)]
+    while not lat or sum(lat) < args.seconds:
+        deploy()
+    # the JIT is still compiling the bootstrap path during the three (their
+    # CPU falls by about a fifth from the first to the third), so each
+    # metric takes the best of them, the one nearest the warmed-up cost
+    boot_wall = [b[0] for b in boots]
+    boot_cpu = [b[1] for b in boots]
+    run.end_to_end["batch_cpu_s"] = min(boot_cpu)
+    run.per_layer["wall.batch_s"] = min(boot_wall)
+    run.say("bootstrap_cpu_s", min(boot_cpu), "s",
+            f"program CPU, best of {BOOTSTRAPS} warm bootstraps of {BOOTSTRAP_MIGRATIONS} "
+            "migrations into empty databases: " + ", ".join(f"{b:.4f}" for b in boot_cpu)
+            + f" s; the first bootstrap in the JVM used {first_boot_cpu:.4f} s")
+    run.say("bootstrap_s", min(boot_wall), "s",
+            "wall, best of the same: " + ", ".join(f"{b:.4f}" for b in boot_wall)
+            + f" s; the first took {first_boot:.4f} s")
     run.phase("timed")
     run.problems += _check_database(spark, db, tree, "after the last deploy")
     # the other databases were bootstrapped from the same tree and not
@@ -379,9 +406,12 @@ def run_migrate(args) -> dict:
         )
     run.phase("check")
 
-    run.end_to_end["op_p50_s"] = median(lat)
-    run.say("deploy_p50_s", median(lat), "s",
-            f"n={len(lat)}, closed loop, one client, ledger of {len(tree.names)} rows at the end")
+    run.end_to_end["op_cpu_p50_s"] = median(cpu)
+    run.per_layer["wall.op_p50_s"] = median(lat)
+    run.say("deploy_cpu_p50_s", median(cpu), "s",
+            f"program CPU, n={len(cpu)}, closed loop, one client, ledger of "
+            f"{len(tree.names)} rows at the end: " + ", ".join(f"{c:.3f}" for c in cpu))
+    run.say("deploy_p50_s", median(lat), "s", f"wall, n={len(lat)}")
     t = tail(lat)
     if t is None:
         run.say("deploy_tail_s", "n/a", "s", f"n={len(lat)} deploys, fewer than 11")
@@ -445,7 +475,7 @@ def run_queries(args) -> dict:
     from tests.conftest import assert_matches_oracle
 
     run = Run(args)
-    spark, session_s = _timed(lambda: get_session("perfbench"))
+    spark, session_s, session_cpu = _measured(run.cpu, lambda: get_session("perfbench"))
     run.phase("session")
     catalog = all_queries()
     queries = {n: catalog[n] for n in QUERIES}
@@ -454,8 +484,9 @@ def run_queries(args) -> dict:
     # inputs, outside every timer: one directory per set-up repetition;
     # the queries read the first one
     dirs = [os.path.abspath(f"data{i}") for i in range(SETUP_REPEATS)]
-    for d in dirs:
-        datagen.generate(d, args.seed, SF)
+    datagen.generate(dirs[0], args.seed, SF)
+    for d in dirs[1:]:
+        shutil.copytree(dirs[0], d)
     sf_dir = dirs[0]
     run.phase("inputs")
 
@@ -463,12 +494,13 @@ def run_queries(args) -> dict:
     # directory. The first, before the queries, pays the JVM's warm-up,
     # so the median is a warm repetition; the others run later (below).
     fit_s: dict[str, list[float]] = defaultdict(list)
-    reps: list[float] = []
+    reps: list[tuple[float, float]] = []  # (wall, program CPU) per repetition
 
     def fit_setup(d: str) -> None:
+        c0 = run.cpu.read()
         for k in SETUP_FITS:
             fit_s[k].append(_timed(lambda: fits[k](spark, d))[1])
-        reps.append(sum(fit_s[k][-1] for k in SETUP_FITS))
+        reps.append((sum(fit_s[k][-1] for k in SETUP_FITS), run.cpu.read() - c0))
 
     fit_setup(sf_dir)
     if args.trace:
@@ -494,10 +526,12 @@ def run_queries(args) -> dict:
     jobs = JobCounter(spark.sparkContext)
     rng = random.Random(args.seed)
     lat: dict[str, list[float]] = defaultdict(list)
+    cpu: dict[str, list[float]] = defaultdict(list)
 
     def execute(name: str) -> tuple[float, dict]:
         dq = queries[name]
         with jobs.group(name) as counted:
+            c0 = run.cpu.read()
             t0 = time.perf_counter()
             try:
                 with tracer.span(f"op.{_module_of(dq)}"):
@@ -510,6 +544,7 @@ def run_queries(args) -> dict:
                 ok = False
                 print(f"{name}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
             dt = time.perf_counter() - t0
+            cpu[name].append(run.cpu.read() - c0)
         run.count(ok, f"{name} raised")
         lat[name].append(dt)
         return dt, counted
@@ -546,15 +581,17 @@ def run_queries(args) -> dict:
             fit_setup(d)
     else:
         # closed loop, one client: passes in a fresh order each time, until
-        # --seconds of executions are done and every query has run at
-        # least once. The remaining set-up repetitions split the loop into
+        # --seconds of executions are done and every query has run
+        # MIN_EXECUTIONS times. The remaining set-up repetitions split the loop into
         # equal chunks, so both the per-query best and the set-up median
         # sample the whole timed part of the run, and a slow phase of the
         # machine shorter than that part moves fewer of their samples.
         order: list[str] = []
         spent = 0.0
         for i in range(1, len(dirs) + 1):
-            while spent < args.seconds * i / len(dirs) or (i == len(dirs) and len(lat) < len(queries)):
+            while spent < args.seconds * i / len(dirs) or (
+                i == len(dirs) and min(len(lat[n]) for n in queries) < MIN_EXECUTIONS
+            ):
                 if not order:
                     order = shuffled()
                 spent += execute(order.pop())[0]
@@ -562,23 +599,35 @@ def run_queries(args) -> dict:
                 fit_setup(dirs[i])
 
     run.phase("timed")
-    run.end_to_end["setup_s"] = session_s + median(reps)
+    run.end_to_end["setup_s"] = session_cpu + median([r[1] for r in reps])
+    run.per_layer["wall.setup_s"] = session_s + median([r[0] for r in reps])
     run.say("setup_s", run.end_to_end["setup_s"], "s",
-            f"session {session_s:.4f} s + median of {SETUP_REPEATS} fits of "
-            f"{'+'.join(SETUP_FITS)}: " + ", ".join(f"{r:.4f}" for r in reps) + " s")
+            f"program CPU: session {session_cpu:.4f} s + median of {SETUP_REPEATS} fits of "
+            f"{'+'.join(SETUP_FITS)}: " + ", ".join(f"{r[1]:.4f}" for r in reps)
+            + f" s; {run.per_layer['wall.setup_s']:.4f} s wall")
     for k, ts in fit_s.items():
         run.per_layer[f"ingest.{k}_fit_s"] = median(ts)
-    # each query's best timed execution: interference from the rest of the
-    # machine only ever adds time, so the minimum is the steadiest estimate
-    # (the catalog bench reports best-of-2 for the same reason)
-    per_query = {n: min(ts) for n, ts in lat.items()}
+    # each query's best program CPU over its timed executions: the first
+    # timed pass still runs partly interpreted code (up to half again the
+    # CPU of a later pass), so the best is the one nearest the warmed-up cost
+    per_query_cpu = {n: min(cs) for n, cs in cpu.items()}
+    run.end_to_end["batch_cpu_s"] = sum(per_query_cpu.values())
+    run.end_to_end["op_cpu_p50_s"] = median(list(per_query_cpu.values()))
     everything = [t for ts in lat.values() for t in ts]
-    run.end_to_end["batch_s"] = sum(per_query.values())
-    run.end_to_end["op_p50_s"] = median(list(per_query.values()))
-    run.say("wall_s", run.end_to_end["batch_s"], "s",
-            f"{len(queries)} queries, sum of per-query best of {len(everything)} executions")
-    run.say("query_p50_s", run.end_to_end["op_p50_s"], "s", "median of per-query best")
-    print("per_query_s " + " ".join(f"{n.split('_')[0]}={t:.3f}" for n, t in per_query.items()))
+    run.say("wall_cpu_s", run.end_to_end["batch_cpu_s"], "s",
+            f"program CPU of one pass over the {len(queries)} queries: the sum of per-query "
+            f"best over {len(everything)} executions")
+    run.say("query_cpu_p50_s", run.end_to_end["op_cpu_p50_s"], "s",
+            "program CPU, median of per-query best")
+    print("per_query_cpu_s " + " ".join(
+        f"{n.split('_')[0]}={t:.3f}" for n, t in per_query_cpu.items()))
+    # wall: each query's best execution, since interference from the rest
+    # of the machine only ever adds time (bench.py reports best-of-2 too)
+    per_query = {n: min(ts) for n, ts in lat.items()}
+    run.per_layer["wall.batch_s"] = sum(per_query.values())
+    run.per_layer["wall.op_p50_s"] = median(list(per_query.values()))
+    run.say("wall_s", run.per_layer["wall.batch_s"], "s", "wall, sum of per-query best")
+    run.say("query_p50_s", run.per_layer["wall.op_p50_s"], "s", "wall, median of per-query best")
     t = tail(everything)
     if t is None:
         run.say("query_tail_s", "n/a", "s", f"n={len(everything)} executions, fewer than 11")
