@@ -5,10 +5,14 @@ The single piece of query logic in the reference is the pending set
 
     pending = sort_numeric_or_alpha( subdirs(migrations_dir) − applied )
 
-which is literally a DataFrame left-anti join + orderBy here. Everything
-else is ordered driver-side orchestration — deliberately so: migrations
-are sequential by contract (Core.pm:158-162), so the loop must never be
-parallelized across migrations.
+computed here as a Python set difference on the driver: one directory
+listing minus the ledger's names, sorted by ``numeric_or_alpha_key``. It
+runs over a few hundred names, so a Spark job would cost more than the
+set arithmetic it does; the only Spark work left is the ledger read
+itself (none for the FileLedger). Everything else is ordered driver-side
+orchestration — deliberately so: migrations are sequential by contract
+(Core.pm:158-162), so the loop must never be parallelized across
+migrations.
 """
 
 from __future__ import annotations
@@ -19,11 +23,11 @@ import subprocess
 from contextlib import contextmanager
 from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .ddl import run_ddl_script
 from .ledger import CatalogLedger, Ledger
-from .model import FileKind, Migration, MigrationFile, numeric_or_alpha_cols, scan_migration
+from .model import FileKind, Migration, MigrationFile, numeric_or_alpha_key, scan_migration
 
 
 class MigrationError(RuntimeError):
@@ -121,31 +125,19 @@ class Migrator:
     def _database_exists(self) -> bool:
         return self.spark.catalog.databaseExists(self.database)
 
-    # -- pending set: scan → anti-join → sort (Core.pm:215-235) -------------
-    def _migration_dirs_df(self) -> DataFrame:
-        names = [
+    # -- pending set: scan − applied → sort (Core.pm:215-235) ---------------
+    def pending_migrations(self) -> list[Migration]:
+        names = {
             e.name
             for e in os.scandir(self.migrations_dir)
             if e.is_dir() and not e.name.startswith(".")  # Core.pm:232-233
-        ]
-        return self.spark.createDataFrame(
-            [(n,) for n in names] or self.spark.sparkContext.emptyRDD(), "name string"
-        )
-
-    def pending_migrations(self) -> list[Migration]:
-        dirs = self._migration_dirs_df()
+        }
+        # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162)
         if self.ledger.exists():
-            applied = self.ledger.applied_df()
-            pending = dirs.join(
-                applied, dirs["name"] == applied["migration"], "left_anti"
-            )
-        else:
-            # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162)
-            pending = dirs
-        ordered = [r["name"] for r in pending.orderBy(*numeric_or_alpha_cols("name")).collect()]
+            names -= self.ledger.applied()
         return [
             scan_migration(os.path.join(self.migrations_dir, n), self.legacy_sql_match)
-            for n in ordered
+            for n in sorted(names, key=numeric_or_alpha_key)
         ]
 
     @property
@@ -186,8 +178,13 @@ class Migrator:
 
     # -- apply loop: strictly ordered (Core.pm:158-162) -----------------------
     def _run_migrations(self) -> None:
-        for migration in self.pending_migrations():
+        pending = self.pending_migrations()
+        for migration in pending:
             self._run_one_migration(migration)
+        # once per deploy, not per record: folds this deploy's one-row
+        # ledger writes into the existing file (see ledger.py)
+        if pending and not self.dry_run:
+            self.ledger.compact()
 
     def _run_one_migration(self, migration: Migration) -> None:
         self.logger.info("running migration %s", migration.name)

@@ -3,12 +3,24 @@ required column is named ``migration`` (reference Migrator.pm:140-153; the
 column is named explicitly in the INSERT so users may add extra columns,
 Changes:34-36).
 
-Backends behind one interface:
+Backends behind one interface. Readers call ``applied()``, the set of
+recorded names; ``applied_df()`` is the same rows as a DataFrame.
+
 - CatalogLedger — a Spark catalog table (parquet-backed). The append is
   not atomic with the migration itself, faithfully mirroring the
   reference's documented at-least-once semantics (Migrator.pm:183-189);
   a Delta-backed ledger would upgrade this to an atomic append and is the
   recommended production backend (jar not present in this environment).
+  On disk every ``record`` adds one single-row data file to the table's
+  directory, so the migrator calls ``compact()`` once at the end of each
+  deploy that recorded something, and the table is back to one file.
+  The compaction never deletes before it has written: (1) list the
+  table's input files, (2) append all their rows as one new file,
+  (3) delete exactly the listed files, (4) refresh the table. A crash
+  after (2) leaves every row twice, which is harmless because readers
+  take the set of names; a crash before (2) changes nothing. This is
+  why it is not an ``INSERT OVERWRITE``, which deletes first: a crash
+  inside it would empty the ledger and re-apply every migration.
 - JdbcLedger — reads/writes the ledger over JDBC (the reference's actual
   I/O plane); requires a JDBC driver jar on the classpath, so it is
   import-safe but raises a clear error when used without one.
@@ -39,8 +51,18 @@ class Ledger(abc.ABC):
     def applied_df(self) -> DataFrame:
         """DataFrame with the single column ``migration: string``."""
 
+    def applied(self) -> set[str]:
+        """The recorded migration names."""
+        return {r[0] for r in self.applied_df().collect()}
+
     @abc.abstractmethod
     def record(self, name: str) -> None: ...
+
+    def compact(self) -> None:
+        """Fold the storage ``record`` left behind; the migrator calls it
+        once after a deploy that recorded something. Nothing by default:
+        the FileLedger's file per entry is its commit protocol, and a
+        JDBC table needs no upkeep."""
 
 
 class CatalogLedger(Ledger):
@@ -64,6 +86,22 @@ class CatalogLedger(Ledger):
             args={"name": name},
         )
 
+    def compact(self) -> None:
+        # the write-then-delete order is the crash-safety argument; see
+        # the module docstring
+        df = self.spark.table(self.table)
+        files = df.inputFiles()
+        if len(files) <= 1:
+            return
+        # all columns, so user-added ledger columns survive
+        df.coalesce(1).write.insertInto(self.table)
+        jvm = self.spark._jvm  # noqa: SLF001
+        conf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            path.getFileSystem(conf).delete(path, False)
+        self.spark.catalog.refreshTable(self.table)
+
 
 class FileLedger(Ledger):
     """Atomic applied-migration ledger on a filesystem directory.
@@ -73,7 +111,7 @@ class FileLedger(Ledger):
          directory and flush+fsync it (write-ahead);
       2. ``os.rename`` it to ``<sha256(name)[:32]>.rec`` — the COMMIT
          POINT. rename(2) is atomic on POSIX filesystems, and dot-files
-         are invisible to both ``applied_df``'s reader and Spark's file
+         are invisible to both ``_entries``' reader and Spark's file
          sources, so a crash between 1 and 2 leaves no observable row;
       3. fsync the ledger DIRECTORY so the committed entry survives a
          power failure after record() returns (rename is atomic but not
@@ -112,6 +150,9 @@ class FileLedger(Ledger):
         return self.spark.createDataFrame(
             [(n,) for n in self._entries()], "migration string"
         )
+
+    def applied(self) -> set[str]:
+        return set(self._entries())
 
     def record(self, name: str) -> None:
         self.create()

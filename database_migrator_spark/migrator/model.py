@@ -14,9 +14,6 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 _NUM_PREFIX = re.compile(r"^(\d+)(.*)$", re.DOTALL)
 
 
@@ -35,20 +32,6 @@ def numeric_or_alpha_key(name: str) -> tuple[int, str]:
     if m:
         return (int(m.group(1)), m.group(2))
     return (0, name)
-
-
-def numeric_or_alpha_cols(name_col: str = "name") -> list[Column]:
-    """The same key as Spark column expressions, for DataFrame orderBy.
-
-    ANSI note: regexp_extract yields '' on no-match, which ANSI casting
-    rejects — hence the explicit empty-string guard instead of a bare cast.
-    """
-    num_str = F.regexp_extract(name_col, r"^(\d+)", 1)
-    num = F.when(num_str == "", F.lit(0)).otherwise(num_str.cast("long"))
-    suffix_matched = F.regexp_extract(name_col, r"^\d+(.*)$", 1)
-    has_prefix = F.regexp_extract(name_col, r"^(\d+)", 1) != ""
-    suffix = F.when(has_prefix, suffix_matched).otherwise(F.col(name_col))
-    return [num.asc(), suffix.asc()]
 
 
 class FileKind(enum.Enum):

@@ -146,6 +146,158 @@ def test_pending_set_is_anti_join(spark, tree):
         m.drop_database()
 
 
+def test_pending_orders_numeric_prefixes_beyond_64_bits(spark, tmp_path):
+    """Names whose digit prefix overflows a 64-bit integer (nanosecond
+    timestamp style) order like every other name, by the Python key."""
+    from database_migrator_spark.migrator.ledger import FileLedger
+
+    ordered = ["alpha", "2-two", "10-ten", "99999999999999999999-big", "123456789012345678901234-huge"]
+    assert sorted(ordered, key=numeric_or_alpha_key) == ordered
+    for n in ordered + ["5-applied"]:
+        (tmp_path / "migrations" / n).mkdir(parents=True)
+    led = FileLedger(spark, str(tmp_path / "ledger"))
+    led.record("5-applied")
+    m = Migrator(spark, "unused", str(tmp_path / "migrations"), ledger=led, quiet=True)
+    assert [p.name for p in m.pending_migrations()] == ordered
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pending_set_spark_job_count(spark, tree, tmp_path):
+    """The pending set is driver-side set arithmetic: no Spark job over a
+    FileLedger, only the ledger read over a catalog table."""
+    from database_migrator_spark.migrator.ledger import FileLedger
+
+    assert _jobs_run_by(spark, lambda: spark.range(3).collect()) == 1  # the counter counts
+
+    led = FileLedger(spark, str(tmp_path / "ledger"))
+    led.record("01-first")
+    m = _migrator(spark, tree, database="unused", ledger=led)
+    assert _jobs_run_by(spark, m.pending_migrations) == 0
+
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        m.ledger.record("00-extra")  # a second data file
+        m2 = _migrator(spark, tree, database=db)
+        assert _jobs_run_by(spark, m2.pending_migrations) <= 1
+    finally:
+        m.drop_database()
+
+
+# -- catalog ledger compaction -------------------------------------------------
+EXTRA_COLUMN_SCHEMA_SQL = """
+CREATE TABLE applied_migration ( migration VARCHAR(250), applied_by VARCHAR(50) );
+INSERT INTO applied_migration VALUES ('00-seed', 'ops');
+"""
+
+
+@pytest.fixture()
+def extra_column_tree(tree):
+    """The harness tree whose ledger has a user column, and one row that
+    sets it for a migration the tree already holds."""
+    (tree / "schema.sql").write_text(EXTRA_COLUMN_SCHEMA_SQL)
+    (tree / "migrations" / "00-seed").mkdir()
+    return tree
+
+
+def _ledger_files(spark, db):
+    return sorted(spark.table(f"{db}.applied_migration").inputFiles())
+
+
+def _ledger_rows(spark, db):
+    return sorted(tuple(r) for r in spark.table(f"{db}.applied_migration").collect())
+
+
+def _data_files_on_disk(spark, db):
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.applied_migration").collect()
+    location = next(r["data_type"] for r in rows if r["col_name"] == "Location")
+    return [f for f in os.listdir(location.removeprefix("file:")) if not f.startswith((".", "_"))]
+
+
+def test_deploy_compacts_catalog_ledger_to_one_file(spark, extra_column_tree):
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, extra_column_tree, database=db)
+    try:
+        m.create_or_update_database()
+        assert len(_ledger_files(spark, db)) == 1
+        assert len(_data_files_on_disk(spark, db)) == 1
+        assert _ledger_rows(spark, db) == [
+            ("00-seed", "ops"), ("01-first", None), ("02-second", None)
+        ]
+    finally:
+        m.drop_database()
+
+
+def test_dry_run_and_status_leave_ledger_files_alone(spark, extra_column_tree):
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, extra_column_tree, database=db)
+    try:
+        m.create_or_update_database()
+        m.ledger.record("99-recorded-elsewhere")  # a second data file
+        (extra_column_tree / "migrations" / "03-third").mkdir()
+        (extra_column_tree / "migrations" / "03-third" / "01-t.sql").write_text(
+            "CREATE TABLE third_t (x INT);"
+        )
+        before = _ledger_files(spark, db)
+        assert len(before) == 2
+
+        _migrator(spark, extra_column_tree, database=db, dry_run=True).create_or_update_database()
+        assert _ledger_files(spark, db) == before
+        status = _migrator(spark, extra_column_tree, database=db)
+        assert status.has_pending_migrations == 1
+        assert _ledger_files(spark, db) == before
+    finally:
+        m.drop_database()
+
+
+def test_crash_between_compacted_write_and_deletes(spark, extra_column_tree, monkeypatch):
+    """The compacted file is written before any old file is deleted, so a
+    crash in between leaves rows twice, never missing: the pending set is
+    still tree − ledger and a re-run applies nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, extra_column_tree, database=db)
+    real_insert_into = DataFrameWriter.insertInto
+
+    def insert_then_crash(self, *args, **kwargs):
+        real_insert_into(self, *args, **kwargs)
+        raise RuntimeError("simulated crash before the deletes")
+
+    try:
+        monkeypatch.setattr(DataFrameWriter, "insertInto", insert_then_crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            m.create_or_update_database()
+        monkeypatch.undo()
+        spark.catalog.refreshTable(f"{db}.applied_migration")
+
+        ledger = {r[0] for r in _ledger_rows(spark, db)}
+        tree_names = set(os.listdir(extra_column_tree / "migrations"))
+        assert ledger == tree_names
+        rows = _ledger_rows(spark, db)
+        assert len(rows) > len(ledger)  # the duplicates
+        assert ("00-seed", "ops") in rows
+        m2 = _migrator(spark, extra_column_tree, database=db)
+        assert m2.pending_migrations() == []
+        m2.create_or_update_database()
+        assert _ledger_rows(spark, db) == rows  # nothing applied, nothing recorded
+    finally:
+        m.drop_database()
+
+
 def test_quiet_verbose_exclusive(spark, tree):
     with pytest.raises(ValueError):
         Migrator(spark, "x", str(tree), quiet=True, verbose=True)
