@@ -1,166 +1,154 @@
-"""DDL execution: statement splitting + a loud dialect shim.
+"""DDL execution: one SQL lexer, statement splitting and a loud dialect shim.
 
 The reference hands `.sql` files opaquely to the DBMS CLI (README.md:38-39,
-Core.pm:176-179). Spark SQL is our DBMS, so the shim translates the common
-RDBMS-isms Spark lacks — degrading LOUDLY (warnings, never silent drops):
+Core.pm:176-179); Spark SQL is our DBMS, so this module does that job.
+``lex`` cuts a script losslessly into ``(kind, text)`` segments: ``code``;
+``comment`` (``--`` to end of line with its newline, or ``/* … */``);
+``string`` (``'…'`` with ``''`` and backslash escapes); ``ident`` (an ANSI
+``"…"`` identifier with ``""`` escapes); ``dollar`` (a Postgres
+``$tag$ … $tag$`` body, the tag possibly empty). An unterminated segment
+runs to the end. Statements end at the semicolons in code; a statement of
+only comments and whitespace is dropped (Spark rejects it).
 
-- PRIMARY KEY / UNIQUE column+table constraints → stripped (informational)
-- AUTO_INCREMENT / SERIAL → stripped with a warning (use identity columns
-  or monotonically_increasing_id in pipelines)
-- CREATE INDEX → warning no-op (Spark has no secondary indexes; data
-  skipping comes from parquet/Z-ordering)
-- TEXT type → STRING
+The shim translates the common RDBMS-isms Spark lacks. It rewrites code
+only — comments, literals and dollar bodies pass through verbatim — and
+degrades LOUDLY (warnings, never silent drops):
 
-JDBC targets should bypass the shim entirely (pass-through, mirroring the
-reference's delegation).
+- PRIMARY KEY / UNIQUE column and table constraints → stripped (informational)
+- AUTO_INCREMENT → stripped (use identity columns or
+  monotonically_increasing_id in pipelines); the SERIAL type → BIGINT
+- CREATE INDEX → no-op (Spark has no secondary indexes; data skipping
+  comes from parquet/Z-ordering)
+- TEXT type → STRING; ANSI "quoted" identifiers → Spark backticks
+
+JDBC targets bypass the shim (pass-through, mirroring the reference's
+delegation); ``jdbc_connection`` is the package's one JDBC connection.
 """
 
 from __future__ import annotations
 
 import logging
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 logger = logging.getLogger("database_migrator_spark.ddl")
 
-
-def split_statements(script: str) -> list[str]:
-    """Split a DDL script on top-level semicolons, respecting single/double
-    quotes and `--` line comments."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    in_s = in_d = in_comment = False
-    i = 0
-    while i < len(script):
-        ch = script[i]
-        nxt = script[i + 1] if i + 1 < len(script) else ""
-        if in_comment:
-            if ch == "\n":
-                in_comment = False
-            buf.append(ch)
-        elif in_s:
-            buf.append(ch)
-            if ch == "\\" and nxt:  # backslash escape inside a literal
-                buf.append(nxt)
-                i += 1
-            elif ch == "'":
-                in_s = False
-        elif in_d:
-            buf.append(ch)
-            if ch == '"':
-                in_d = False
-        elif ch == "-" and nxt == "-":
-            in_comment = True
-            buf.append(ch)
-        elif ch == "'":
-            in_s = True
-            buf.append(ch)
-        elif ch == '"':
-            in_d = True
-            buf.append(ch)
-        elif ch == ";":
-            s = "".join(buf).strip()
-            if s:
-                stmts.append(s)
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        stmts.append(tail)
-    return stmts
-
-
-_CREATE_INDEX = re.compile(r"^\s*CREATE\s+(UNIQUE\s+)?INDEX\b", re.IGNORECASE)
-_PK_TABLE = re.compile(r",?\s*PRIMARY\s+KEY\s*\([^)]*\)", re.IGNORECASE)
-_PK_COL = re.compile(r"\bPRIMARY\s+KEY\b", re.IGNORECASE)
-_UNIQUE = re.compile(r"\bUNIQUE\b", re.IGNORECASE)
-_AUTOINC = re.compile(r"\bAUTO_INCREMENT\b", re.IGNORECASE)
-_SERIAL = re.compile(r"\bSERIAL\b", re.IGNORECASE)  # a TYPE — map, don't strip
-# TEXT only in TYPE position — preceded by another identifier (a column
-# name, or AS in a cast) — so a column literally named `text` survives:
-# 'CREATE TABLE d (text TEXT)' → '(text STRING)', not '(STRING STRING)'.
-# The \A alternative covers QUOTED column names: _sub_outside_literals
-# substitutes per unquoted SEGMENT, and the segment after '"note"' starts
-# with whitespace + TEXT.
-_TEXT_TYPE = re.compile(
-    r"(?P<pre>\b[A-Za-z_][\w$]*\s+|\A\s*)TEXT\b", re.IGNORECASE
+_SEGMENT = re.compile(
+    r"""
+      (?P<comment> --[^\n]*\n? | /\*.*?(?:\*/|\Z) )
+    | (?P<string>  '(?:''|\\.?|[^'\\])*(?:'|\Z) )
+    | (?P<ident>   "(?:""|[^"])*(?:"|\Z) )
+    | (?P<dollar>  \$(?P<tag>(?:[A-Za-z_]\w*)?)\$ .*? (?:\$(?P=tag)\$|\Z) )
+    | (?P<code>    (?:[^-/'"$\w]|\w[\w$]*)+ | . )
+    """,
+    re.DOTALL | re.VERBOSE,
 )
 
-_QUOTED_SPAN = re.compile(r"'(?:\\.|[^'])*'|\"(?:\\.|[^\"])*\"", re.DOTALL)
+
+def lex(sql: str) -> Iterator[tuple[str, str]]:
+    """The ``(kind, text)`` segments of ``sql``; the texts join back to it."""
+    for m in _SEGMENT.finditer(sql):
+        yield m.lastgroup, m.group()
 
 
-def _sub_outside_literals(pattern: re.Pattern, repl: str, stmt: str) -> str:
-    """Apply a regex substitution only OUTSIDE quoted string literals /
-    quoted identifiers, so data like 'this unique text' is never touched."""
-    out = []
-    pos = 0
-    for m in _QUOTED_SPAN.finditer(stmt):
-        out.append(pattern.sub(repl, stmt[pos : m.start()]))
-        out.append(m.group(0))
-        pos = m.end()
-    out.append(pattern.sub(repl, stmt[pos:]))
-    return "".join(out)
+def split_statements(script: str) -> list[str]:
+    """Split a DDL script at the semicolons in its code, dropping the
+    statements that hold only comments and whitespace."""
+    statements: list[list[tuple[str, str]]] = [[]]
+    for kind, text in lex(script):
+        first, *rest = text.split(";") if kind == "code" else [text]
+        statements[-1].append((kind, first))
+        statements.extend([(kind, piece)] for piece in rest)
+    return [
+        "".join(text for _, text in stmt).strip()
+        for stmt in statements
+        if any(kind != "comment" and text.strip() for kind, text in stmt)
+    ]
 
 
-def _dquoted_identifiers_to_backticks(stmt: str) -> tuple[str, bool]:
-    """ANSI double-quoted identifiers → Spark backticks. In ANSI SQL (the
-    reference's Postgres-family world) double quotes ALWAYS quote
-    identifiers — string literals use single quotes — while Spark parses
-    them as string literals, so '("note" TEXT)' would be a syntax error
-    without this. Embedded backticks are escaped by doubling."""
-    out = []
-    pos = 0
-    changed = False
-    for m in _QUOTED_SPAN.finditer(stmt):
-        out.append(stmt[pos : m.start()])
-        span = m.group(0)
-        if span.startswith('"'):
-            inner = span[1:-1].replace("`", "``")
-            out.append(f"`{inner}`")
-            changed = True
-        else:
-            out.append(span)
-        pos = m.end()
-    out.append(stmt[pos:])
-    return "".join(out), changed
+# The shim's rules see a statement whose non-code segments are slots:
+# '"' + the kind's first letter + the segment's index + '"'. Code never
+# holds a double quote, so no rule can read or rewrite what a slot hides.
+_SLOT = re.compile(r'"[a-z](\d+)"')
+_KEPT_SLOTS = re.compile(r'"[csd]\d+"')  # comment, string and dollar slots
+_IDENT_SLOT = r'"i\d+"'
+_BLANK = r'(?:\s|"c\d+")'  # whitespace, a comment counting as such
+_NAME = rf"(?:\b[A-Za-z_][\w$]*|{_IDENT_SLOT})"
+_QUOTED_IDENT = re.compile(r'"((?:""|[^"])*)"')
+
+_CREATE_INDEX = re.compile(rf"{_BLANK}*CREATE{_BLANK}+(?:UNIQUE{_BLANK}+)?INDEX\b", re.I)
+_AUTOINC = re.compile(r"\bAUTO_INCREMENT\b", re.I)
+_SERIAL = re.compile(r"\bSERIAL\b", re.I)  # a TYPE — map, don't strip
+# TEXT only in TYPE position — after a name (a column, or AS in a cast) —
+# so a column literally named `text` survives:
+# 'CREATE TABLE d (text TEXT)' → '(text STRING)', not '(STRING STRING)'.
+_TEXT_TYPE = re.compile(rf"(?P<pre>{_NAME}\s+)TEXT\b", re.I)
+
+
+def _constraint(keyword: str) -> re.Pattern:
+    """A table constraint with its leading comma — ``, [CONSTRAINT name]
+    KEYWORD (columns)`` — or else the column-level keyword alone."""
+    table = rf",{_BLANK}*(?:CONSTRAINT{_BLANK}+{_NAME}{_BLANK}+)?{keyword}{_BLANK}*\([^)]*\)"
+    return re.compile(rf"{table}|\b{keyword}\b", re.I)
+
+
+def _kept_slots(m: re.Match) -> str:
+    """Drop a match's code and identifiers, keep its other segments."""
+    return "".join(_KEPT_SLOTS.findall(m.group()))
+
+
+_RULES = (  # (pattern, replacement, warning), each run once in this order
+    (_AUTOINC, "", "stripping AUTO_INCREMENT (no Spark equivalent)"),
+    (_SERIAL, "BIGINT", "mapping SERIAL type to BIGINT"),
+    (_constraint(r"PRIMARY\s+KEY"), _kept_slots,
+     "stripping PRIMARY KEY constraint (informational on Spark)"),
+    (_constraint("UNIQUE"), _kept_slots, "stripping UNIQUE constraint (informational on Spark)"),
+    (_TEXT_TYPE, r"\g<pre>STRING", "mapping TEXT type to STRING"),
+)
+
+
+def _restore(text: str) -> str:
+    """A segment back in the translated statement: a (terminated) quoted
+    identifier as Spark backticks (``""`` → ``"``, backticks doubled),
+    anything else verbatim."""
+    m = _QUOTED_IDENT.fullmatch(text)
+    return text if m is None else "`" + m[1].replace('""', '"').replace("`", "``") + "`"
 
 
 def translate_statement(stmt: str) -> str | None:
-    """Translate one statement to Spark SQL; return None for loud no-ops.
-    All substitutions are literal-safe (quoted spans pass through)."""
-    if _CREATE_INDEX.match(stmt):
+    """Translate one statement to Spark SQL; return None for loud no-ops."""
+    segments = list(lex(stmt))
+    out = "".join(
+        text if kind == "code" else f'"{kind[0]}{i}"' for i, (kind, text) in enumerate(segments)
+    )
+    if _CREATE_INDEX.match(out):
         logger.warning("CREATE INDEX is a no-op on Spark catalog targets: %.80s", stmt)
         return None
-    out = stmt
-    unquoted = _QUOTED_SPAN.sub("", out)
-    if _AUTOINC.search(unquoted):
-        logger.warning("stripping AUTO_INCREMENT (no Spark equivalent): %.80s", stmt)
-        out = _sub_outside_literals(_AUTOINC, "", out)
-    if _SERIAL.search(unquoted):
-        logger.warning("mapping SERIAL type to BIGINT: %.80s", stmt)
-        out = _sub_outside_literals(_SERIAL, "BIGINT", out)
-    if _PK_TABLE.search(unquoted) or _PK_COL.search(unquoted):
-        logger.warning("stripping PRIMARY KEY constraint (informational on Spark): %.80s", stmt)
-        out = _sub_outside_literals(_PK_TABLE, "", out)
-        out = _sub_outside_literals(_PK_COL, "", out)
-    if _UNIQUE.search(unquoted):
-        logger.warning("stripping UNIQUE constraint (informational on Spark): %.80s", stmt)
-        out = _sub_outside_literals(_UNIQUE, "", out)
-    # detection must be segment-aware (a TEXT after a QUOTED column name is
-    # invisible in `unquoted`), so detect by substituting and comparing
-    rewritten = _sub_outside_literals(_TEXT_TYPE, r"\g<pre>STRING", out)
-    if rewritten != out:
-        logger.warning("mapping TEXT type to STRING: %.80s", stmt)
-        out = rewritten
-    out, converted = _dquoted_identifiers_to_backticks(out)
-    if converted:
-        logger.warning(
-            "converting ANSI double-quoted identifiers to backticks: %.80s", stmt
-        )
-    return out
+    for pattern, repl, warning in _RULES:
+        out, n = pattern.subn(repl, out)
+        if n:
+            logger.warning("%s: %.80s", warning, stmt)
+    if re.search(_IDENT_SLOT, out):
+        logger.warning("converting ANSI double-quoted identifiers to backticks: %.80s", stmt)
+    return _SLOT.sub(lambda m: _restore(segments[int(m[1])][1]), out)
+
+
+@contextmanager
+def jdbc_connection(spark: SparkSession, url: str, properties: dict[str, str] | None = None):
+    """A ``java.sql.Connection`` to ``url`` from the session JVM's
+    ``DriverManager``, closed on exit."""
+    jvm = spark._jvm  # noqa: SLF001
+    props = jvm.java.util.Properties()
+    for k, v in (properties or {}).items():
+        props.setProperty(k, v)
+    conn = jvm.java.sql.DriverManager.getConnection(url, props)
+    try:
+        yield conn
+    finally:
+        conn.close()
 
 
 def run_ddl_script_jdbc(
@@ -173,24 +161,16 @@ def run_ddl_script_jdbc(
     """JDBC pass-through DDL: statements go to the target DBMS verbatim —
     no dialect shim — mirroring the reference's delegation of `.sql` files
     to the database's own utility (README.md:38-39, Core.pm:176-179).
-    Uses java.sql.DriverManager through the session JVM (Spark's DataFrame
-    JDBC API cannot execute arbitrary DDL)."""
+    Spark's DataFrame JDBC API cannot execute arbitrary DDL, hence a
+    plain connection."""
     stmts = split_statements(script)
     if dry_run:
         return stmts
-    jvm = spark._jvm  # noqa: SLF001
-    props = jvm.java.util.Properties()
-    for k, v in (properties or {}).items():
-        props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
-    try:
+    with jdbc_connection(spark, url, properties) as conn:
         st = conn.createStatement()
         for stmt in stmts:
             logger.debug("JDBC DDL: %s", stmt)
             st.execute(stmt)
-        st.close()
-    finally:
-        conn.close()
     return stmts
 
 

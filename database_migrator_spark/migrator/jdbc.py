@@ -18,7 +18,7 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 from .core import Migrator
-from .ddl import run_ddl_script_jdbc
+from .ddl import jdbc_connection, run_ddl_script_jdbc
 from .ledger import JdbcLedger
 
 
@@ -51,28 +51,20 @@ class JdbcMigrator(Migrator):
         )
 
     # -- existence probe: lazy try-connect (Core.pm:65-71, 252-257) ----------
-    def _jprops(self):
-        jvm = self.spark._jvm  # noqa: SLF001
-        props = jvm.java.util.Properties()
-        for k, v in self.jdbc_properties.items():
-            props.setProperty(k, v)
-        return props
-
     @property
     def _database_exists(self) -> bool:  # type: ignore[override]
-        jvm = self.spark._jvm  # noqa: SLF001
+        # strip create flags so probing doesn't create the database
+        probe_url = self.jdbc_url.replace(";create=true", "")
         try:
-            # strip create flags so probing doesn't create the database
-            probe_url = self.jdbc_url.replace(";create=true", "")
-            jvm.java.sql.DriverManager.getConnection(probe_url, self._jprops()).close()
-            return True
+            with jdbc_connection(self.spark, probe_url, self.jdbc_properties):
+                return True
         except Exception:
             return False
 
     # -- create: connect with the (create-capable) URL ------------------------
     def create_database(self) -> None:
-        jvm = self.spark._jvm  # noqa: SLF001
-        jvm.java.sql.DriverManager.getConnection(self.jdbc_url, self._jprops()).close()
+        with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties):
+            pass
 
     def create_or_update_database(self) -> None:  # Core.pm:141-156
         if not self._database_exists:
@@ -88,14 +80,8 @@ class JdbcMigrator(Migrator):
 
     def run_sql(self, stmt: str):  # type: ignore[override]
         """Pass-through execution on the target DBMS (no Spark dialect)."""
-        jvm = self.spark._jvm  # noqa: SLF001
-        conn = jvm.java.sql.DriverManager.getConnection(self.jdbc_url, self._jprops())
-        try:
-            st = conn.createStatement()
-            st.execute(stmt)
-            st.close()
-        finally:
-            conn.close()
+        with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties) as conn:
+            conn.createStatement().execute(stmt)
 
     # -- pass-through DDL ------------------------------------------------------
     def _run_ddl_file(self, path: str) -> None:

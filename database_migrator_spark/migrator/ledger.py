@@ -23,7 +23,8 @@ recorded names; ``applied_df()`` is the same rows as a DataFrame.
   inside it would empty the ledger and re-apply every migration.
 - JdbcLedger — reads/writes the ledger over JDBC (the reference's actual
   I/O plane); requires a JDBC driver jar on the classpath, so it is
-  import-safe but raises a clear error when used without one.
+  import-safe but raises a clear error when used without one. ``record``
+  is a bound INSERT, not a Spark job, and never creates the table.
 - FileLedger — an ATOMIC append via write-ahead temp file + rename
   commit: each applied migration is one dot-invisible staging file
   promoted to a committed entry by a single os.rename (atomic on POSIX;
@@ -41,6 +42,8 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .ddl import jdbc_connection
 
 
 class Ledger(abc.ABC):
@@ -214,12 +217,7 @@ class JdbcLedger(Ledger):
         # error whose message happens to contain 'not found' must RAISE,
         # never silently classify as 'ledger missing'. Connectivity errors
         # propagate from getConnection itself.
-        jvm = self.spark._jvm  # noqa: SLF001
-        props = jvm.java.util.Properties()
-        for k, v in self.properties.items():
-            props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(self.url, props)
-        try:
+        with jdbc_connection(self.spark, self.url, self.properties) as conn:
             meta = conn.getMetaData()
             # unquoted identifiers are stored case-folded per DBMS (Derby/
             # Oracle upper, Postgres lower) — probe the plausible foldings.
@@ -237,8 +235,6 @@ class JdbcLedger(Ledger):
                 finally:
                     rs.close()
             return False
-        finally:
-            conn.close()
 
     def applied_df(self) -> DataFrame:
         from pyspark.sql import functions as F
@@ -250,5 +246,16 @@ class JdbcLedger(Ledger):
         )
 
     def record(self, name: str) -> None:
-        df = self.spark.createDataFrame([(name,)], "migration string")
-        df.write.jdbc(self.url, self.table, mode="append", properties=self.properties)
+        # the named-column INSERT (Core.pm:208-210), bound, on a plain
+        # connection: no Spark job. The column is quoted as the table
+        # spells it: DBMSes fold unquoted names differently, and Spark's
+        # JDBC writer creates a quoted lower-case "migration".
+        with jdbc_connection(self.spark, self.url, self.properties) as conn:
+            probe = f"SELECT * FROM {self.table} WHERE 1 = 0"  # noqa: S608
+            cols = conn.createStatement().executeQuery(probe).getMetaData()
+            names = [cols.getColumnName(i + 1) for i in range(cols.getColumnCount())]
+            col = next((c for c in names if c.lower() == "migration"), "migration")
+            q = conn.getMetaData().getIdentifierQuoteString().strip()
+            st = conn.prepareStatement(f"INSERT INTO {self.table} ({q}{col}{q}) VALUES (?)")
+            st.setString(1, name)
+            st.executeUpdate()

@@ -11,7 +11,11 @@ import uuid
 import pytest
 
 from database_migrator_spark.migrator.core import MigrationError, Migrator
-from database_migrator_spark.migrator.ddl import split_statements, translate_statement
+from database_migrator_spark.migrator.ddl import (
+    run_ddl_script,
+    split_statements,
+    translate_statement,
+)
 from database_migrator_spark.migrator.model import (
     classify_file,
     numeric_or_alpha_key,
@@ -392,6 +396,89 @@ def test_split_statements_backslash_escaped_quote():
     stmts = split_statements(r"INSERT INTO t VALUES ('it\'s; done'); SELECT 1")
     assert len(stmts) == 2
     assert r"it\'s; done" in stmts[0]
+
+
+@pytest.mark.parametrize(
+    "script, executed, columns",
+    [
+        pytest.param(
+            "CREATE TABLE t (id INT);\n-- end of file\n",
+            ["CREATE TABLE t (id INT)"],
+            ["id"],
+            id="comment-after-last-statement",
+        ),
+        pytest.param(
+            "CREATE TABLE t (c INT);\n-- add an index\nCREATE INDEX i ON t (c)",
+            ["CREATE TABLE t (c INT)"],
+            ["c"],
+            id="commented-create-index",
+        ),
+        pytest.param(
+            'CREATE TABLE t (id INT, PRIMARY KEY ("id"))',
+            ["CREATE TABLE t (id INT)"],
+            ["id"],
+            id="table-primary-key-quoted-column",
+        ),
+        pytest.param(
+            "CREATE TABLE t (id INT, x INT, UNIQUE (x))",
+            ["CREATE TABLE t (id INT, x INT)"],
+            ["id", "x"],
+            id="table-unique",
+        ),
+        pytest.param(
+            "CREATE TABLE t (id INT, CONSTRAINT pk PRIMARY KEY (id))",
+            ["CREATE TABLE t (id INT)"],
+            ["id"],
+            id="named-table-constraint",
+        ),
+        pytest.param(
+            "-- don't\nCREATE TABLE t (id SERIAL PRIMARY KEY, z TEXT);\n-- isn't\n",
+            ["-- don't\nCREATE TABLE t (id BIGINT , z STRING)"],
+            ["id", "z"],
+            id="apostrophes-in-comments",
+        ),
+        pytest.param(
+            'CREATE TABLE t ("a""b" TEXT)',
+            ['CREATE TABLE t (`a"b` STRING)'],
+            ['a"b'],
+            id="doubled-quote-in-identifier",
+        ),
+        pytest.param(
+            "/* a; b */ CREATE TABLE t (a INT)",
+            ["/* a; b */ CREATE TABLE t (a INT)"],
+            ["a"],
+            id="semicolon-in-block-comment",
+        ),
+        pytest.param(
+            "-- unique text serial\nCREATE TABLE t (a INT)",
+            ["-- unique text serial\nCREATE TABLE t (a INT)"],
+            ["a"],
+            id="keywords-in-comment",
+        ),
+        pytest.param(
+            "CREATE FUNCTION f() RETURNS int AS $$ BEGIN x := 1; RETURN x; END $$;\nSELECT 1",
+            ["CREATE FUNCTION f() RETURNS int AS $$ BEGIN x := 1; RETURN x; END $$", "SELECT 1"],
+            None,  # Postgres DDL: split and translated, not run on Spark
+            id="semicolons-in-dollar-body",
+        ),
+    ],
+)
+def test_ddl_shim_lexes_comments_literals_and_identifiers(spark, script, executed, columns):
+    """Comments, quoted identifiers and dollar bodies are lexed once, the
+    same way, for splitting and for the shim."""
+    if columns is None:
+        assert run_ddl_script(spark, script, dry_run=True) == executed
+        return
+    db = f"ddltest_{uuid.uuid4().hex[:8]}"
+    prev = spark.catalog.currentDatabase()
+    spark.sql(f"CREATE DATABASE {db}")
+    spark.catalog.setCurrentDatabase(db)
+    try:
+        assert run_ddl_script(spark, script) == executed
+        assert spark.table("t").columns == columns
+    finally:
+        spark.catalog.setCurrentDatabase(prev)
+        spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
 def test_dry_run_skips_module_level_side_effects(spark, tmp_path, tree):

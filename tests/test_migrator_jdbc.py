@@ -68,3 +68,43 @@ def test_jdbc_migrator_end_to_end(spark, tree, tmp_path):
     m2.create_or_update_database()
     applied2 = sorted(r[0] for r in m2.ledger.applied_df().collect())
     assert applied2 == applied
+
+
+def test_jdbc_ledger_record_runs_no_spark_job(spark, tmp_path):
+    """The JDBC ledger write is one bound INSERT on a plain connection,
+    not a Spark write job."""
+    from database_migrator_spark.migrator.ddl import run_ddl_script_jdbc
+    from database_migrator_spark.migrator.ledger import JdbcLedger
+
+    from .test_migrator import _jobs_run_by
+
+    url = f"jdbc:derby:{tmp_path}/recdb;create=true"
+    run_ddl_script_jdbc(spark, "CREATE TABLE applied_migration (migration VARCHAR(250))", url)
+    ledger = JdbcLedger(spark, url)
+    assert _jobs_run_by(spark, lambda: ledger.record("01-a")) == 0
+    assert ledger.applied() == {"01-a"}
+
+
+def test_jdbc_missing_ledger_table_gives_contract_error(spark, tmp_path):
+    """As on the catalog target: a schema that does not create the ledger
+    table breaks the reference contract (Migrator.pm:140-153), and the
+    record says so instead of creating the table itself."""
+    from database_migrator_spark.migrator.core import MigrationError
+
+    (tmp_path / "schema.sql").write_text("CREATE TABLE only_t (id INT)")
+    mig = tmp_path / "migrations" / "01-a"
+    mig.mkdir(parents=True)
+    (mig / "01-add.sql").write_text("CREATE TABLE added_t (id INT)")
+    url = f"jdbc:derby:{tmp_path}/noledger;create=true"
+    m = JdbcMigrator(
+        spark,
+        jdbc_url=url,
+        migrations_dir=str(tmp_path / "migrations"),
+        schema_file=str(tmp_path / "schema.sql"),
+        quiet=True,
+    )
+    with pytest.raises(MigrationError, match="schema DDL must create"):
+        m.create_or_update_database()
+    assert not m.ledger.exists()
+    # at-least-once: the migration itself WAS applied before the error
+    assert spark.read.jdbc(url, "added_t", properties={}).columns == ["ID"]

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the engine's small pure cores:
-the numeric-or-alpha sort key, the DDL statement splitter, and
+the numeric-or-alpha sort key, the DDL lexer, splitter and shim, and
 exact-cents arithmetic. The reference ships no property tests at all
 (SURVEY.md §5); these pin the semantics its harness only spot-checks."""
 
@@ -11,7 +11,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from database_migrator_spark.migrator.ddl import split_statements
+from database_migrator_spark.migrator.ddl import lex, split_statements, translate_statement
 from database_migrator_spark.migrator.model import numeric_or_alpha_key
 
 _name = st.text(
@@ -58,6 +58,80 @@ def test_split_statements_preserves_literal_content(fragments):
     assert len(stmts) == len(literals)
     for lit, stmt in zip(literals, stmts):
         assert f"('{lit}')" in stmt
+
+
+_SQL_CHARS = "ab ;'\"-/*$\\\n"
+
+
+@given(st.one_of(st.text(), st.text(alphabet=_SQL_CHARS + "q_1", max_size=60)))
+@settings(max_examples=300, deadline=None)
+def test_lex_is_lossless(text):
+    segments = list(lex(text))
+    assert "".join(t for _, t in segments) == text
+    assert {k for k, _ in segments} <= {"code", "comment", "string", "ident", "dollar"}
+
+
+_inner = st.text(alphabet=_SQL_CHARS, max_size=12)
+
+
+def _dollar(tag: str, body: str) -> str:
+    return f"${tag}${body}${tag}$"
+
+
+# segments with their kinds, built independently of the lexer; each
+# non-code kind may hold semicolons, quotes and comment markers
+_noncode = st.one_of(
+    _inner.map(lambda s: ("comment", "--" + s.replace("\n", "") + "\n")),
+    _inner.filter(lambda s: "*/" not in s).map(lambda s: ("comment", f"/*{s}*/")),
+    _inner.map(lambda s: ("string", "'" + s.replace("\\", "\\\\").replace("'", "''") + "'")),
+    _inner.map(lambda s: ("ident", '"' + s.replace('"', '""') + '"')),
+    st.tuples(st.sampled_from(["", "q"]), _inner)
+    .filter(lambda tb: (tb[1] + f"${tb[0]}$").find(f"${tb[0]}$") == len(tb[1]))
+    .map(lambda tb: ("dollar", _dollar(*tb))),
+)
+_code = st.sampled_from(
+    ["CREATE TABLE t", "CREATE INDEX i ON t", "(", ")", ",", "x", "INT", "TEXT",
+     "SERIAL", "AUTO_INCREMENT", "PRIMARY KEY", "UNIQUE", "CONSTRAINT c", "\n"]
+).map(lambda c: ("code", c))
+_SEMI = ("code", ";")
+
+
+def _join(tokens) -> str:
+    return " ".join(t for _, t in tokens)
+
+
+@given(st.lists(st.one_of(_noncode, _code, st.just(_SEMI)), max_size=20))
+@settings(max_examples=300, deadline=None)
+def test_statement_boundaries_fall_only_in_code(tokens):
+    """The lexer finds exactly the generated non-code segments, and the
+    splitter cuts only at the semicolon tokens, dropping the statements
+    that are nothing but comments and whitespace."""
+    script = _join(tokens)
+    assert [s for s in lex(script) if s[0] != "code"] == [t for t in tokens if t[0] != "code"]
+    groups: list[list] = [[]]
+    for tok in tokens:
+        if tok == _SEMI:
+            groups.append([])
+        else:
+            groups[-1].append(tok)
+    assert split_statements(script) == [
+        _join(g).strip() for g in groups if any(k != "comment" and t.strip() for k, t in g)
+    ]
+
+
+@given(st.lists(st.one_of(_noncode, _code), max_size=20))
+@settings(max_examples=300, deadline=None)
+def test_translate_rewrites_code_only(tokens):
+    """Every comment, string literal and dollar body comes out of the
+    shim verbatim and in order (identifiers become backticks, and may go
+    with the constraint that lists them)."""
+    out = translate_statement(_join(tokens))
+    if out is None:  # a CREATE INDEX no-op
+        return
+    pos = 0
+    for kind, text in tokens:
+        if kind in ("comment", "string", "dollar"):
+            pos = out.index(text, pos) + len(text)
 
 
 @given(_name, _name)
