@@ -150,7 +150,9 @@ class Migrator:
         """Run with ``self.database`` as the current database so unqualified
         DDL in schema/migration files lands in the right namespace."""
         prev = self.spark.catalog.currentDatabase()
-        if self.spark.catalog.databaseExists(self.database):
+        # the memoized probe, set once CREATE DATABASE has run; false only
+        # under a dry run of a new database, which then has nothing to enter
+        if self._database_exists:
             self.spark.catalog.setCurrentDatabase(self.database)
         try:
             yield
@@ -175,16 +177,29 @@ class Migrator:
 
     def drop_database(self) -> None:  # test harness support (Core.pm:29)
         self.spark.sql(f"DROP DATABASE IF EXISTS `{self.database}` CASCADE")
+        self.__dict__.pop("_database_exists", None)  # _in_database trusts the memo
 
     # -- apply loop: strictly ordered (Core.pm:158-162) -----------------------
     def _run_migrations(self) -> None:
         pending = self.pending_migrations()
-        for migration in pending:
-            self._run_one_migration(migration)
-        # once per deploy, not per record: folds this deploy's one-row
-        # ledger writes into the existing file (see ledger.py)
-        if pending and not self.dry_run:
-            self.ledger.compact()
+        done = False
+        try:
+            for migration in pending:
+                self._run_one_migration(migration)
+            done = True
+        finally:
+            # once per deploy, a failed one too, so the migrations recorded
+            # before the failure reach the ledger table; also folds what a
+            # crashed deploy left, and costs nothing when there is nothing
+            # to fold (see ledger.py)
+            if not self.dry_run:
+                try:
+                    self.ledger.compact()
+                except Exception:
+                    if done:
+                        raise
+                    # the migration's own error is the one to report
+                    self.logger.error("could not compact the ledger", exc_info=True)
 
     def _run_one_migration(self, migration: Migration) -> None:
         self.logger.info("running migration %s", migration.name)

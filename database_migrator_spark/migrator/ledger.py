@@ -6,21 +6,36 @@ Changes:34-36).
 Backends behind one interface. Readers call ``applied()``, the set of
 recorded names; ``applied_df()`` is the same rows as a DataFrame.
 
-- CatalogLedger — a Spark catalog table (parquet-backed). The append is
-  not atomic with the migration itself, faithfully mirroring the
-  reference's documented at-least-once semantics (Migrator.pm:183-189);
-  a Delta-backed ledger would upgrade this to an atomic append and is the
-  recommended production backend (jar not present in this environment).
-  On disk every ``record`` adds one single-row data file to the table's
-  directory, so the migrator calls ``compact()`` once at the end of each
-  deploy that recorded something, and the table is back to one file.
-  The compaction never deletes before it has written: (1) list the
-  table's input files, (2) append all their rows as one new file,
-  (3) delete exactly the listed files, (4) refresh the table. A crash
-  after (2) leaves every row twice, which is harmless because readers
-  take the set of names; a crash before (2) changes nothing. This is
-  why it is not an ``INSERT OVERWRITE``, which deletes first: a crash
-  inside it would empty the ledger and re-apply every migration.
+- CatalogLedger — a Spark catalog table (parquet-backed). ``record`` runs
+  no Spark job: it commits one entry into a journal, the hidden directory
+  ``_migrator_journal/`` inside the table's own location (Spark's file
+  listing skips ``_``-prefixed paths, and ``DROP TABLE`` removes it with
+  the table). The commit is FileLedger's, over the Hadoop FileSystem of
+  the table location: write the name to ``.tmp-<uuid>``, hsync and close
+  it, rename it to ``<sha256(name)[:32]>.rec``. A reader never sees a
+  partial entry, so the record is atomic, where the one-row ``INSERT``
+  it replaces was not; a retried record finds the same entry. Readers
+  take the table rows ∪ the journal names. Once per deploy ``compact()``
+  (1) takes the journal names not among the table rows read at the
+  start of the deploy, (2) inserts them with one named-column ``INSERT``
+  (one job, one file), (3) deletes the journal entries, and (4) if the
+  table has more than one data file, appends all its rows as one new
+  file, deletes exactly the files it listed before, and refreshes the
+  table. The migration itself is still not atomic with its record, as
+  in the reference (at-least-once, Migrator.pm:183-189); a Delta-backed
+  ledger would close that and is the recommended production backend
+  (jar not present in this environment). The four crash windows:
+  - before a record's rename: only a dot-file that every reader
+    ignores; the migration runs again on the next deploy, as it would
+    at the reference;
+  - after a record, before (2): the names sit in the journal only;
+    readers see them and the next deploy writes them into the table;
+  - after (2), before (3) completes: the names sit in both places; the
+    next deploy skips those already in the table, so no row is doubled;
+  - inside (4): every row sits twice until the next compaction, which
+    is harmless because readers take the set of names. This is why (4)
+    is not an ``INSERT OVERWRITE``, which deletes first: a crash inside
+    it would empty the ledger and re-apply every migration.
 - JdbcLedger — reads/writes the ledger over JDBC (the reference's actual
   I/O plane); requires a JDBC driver jar on the classpath, so it is
   import-safe but raises a clear error when used without one. ``record``
@@ -41,6 +56,7 @@ import hashlib
 import os
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .ddl import jdbc_connection
@@ -63,45 +79,155 @@ class Ledger(abc.ABC):
 
     def compact(self) -> None:
         """Fold the storage ``record`` left behind; the migrator calls it
-        once after a deploy that recorded something. Nothing by default:
-        the FileLedger's file per entry is its commit protocol, and a
-        JDBC table needs no upkeep."""
+        once after every deploy that is not a dry run, a failed one too.
+        Nothing by default: the FileLedger's file per entry is its commit
+        protocol, and a JDBC table needs no upkeep."""
+
+
+def _entry_name(name: str) -> str:
+    """The committed file of ``name``: a pure function of it, so a
+    retried record finds the same entry."""
+    return hashlib.sha256(name.encode("utf-8")).hexdigest()[:32] + ".rec"
 
 
 class CatalogLedger(Ledger):
+    """The ledger table plus its journal; see the module docstring.
+
+    One deploy calls ``exists``, ``applied``, ``record`` per migration and
+    ``compact``. The first two remember the table location, the table
+    rows and the journal entries, so the rest of the deploy reads neither
+    the catalog nor the journal again."""
+
+    JOURNAL = "_migrator_journal"
+
     def __init__(self, spark: SparkSession, table: str = "applied_migration"):
         self.spark = spark
         self.table = table
+        self._location: str | None = None  # as of the last catalog lookup
+        self._rows: set[str] | None = None  # the table's names, read by applied()
+        self._journal: dict[str, str] | None = None  # entry file -> name
+
+    def _lookup(self) -> str | None:
+        """The table location from one external-catalog ``getTable``;
+        None when the table or its database is missing."""
+        db, _, name = self.table.rpartition(".")
+        db = db.strip("`") or self.spark.catalog.currentDatabase()
+        catalog = self.spark._jsparkSession.sharedState().externalCatalog()  # noqa: SLF001
+        try:
+            meta = catalog.getTable(db.lower(), name.strip("`").lower())
+        except AnalysisException as e:
+            if e.getCondition() not in ("TABLE_OR_VIEW_NOT_FOUND", "SCHEMA_NOT_FOUND"):
+                raise
+            self._location = None
+        else:
+            self._location = meta.location().toString()
+        return self._location
 
     def exists(self) -> bool:
         # exact-match existence check — deliberately fixes the reference's
         # substring false-positive risk (`/\b\Q$table\E\b/` over
         # dbh->tables(), Core.pm:221)
-        return self.spark.catalog.tableExists(self.table)
+        return self._lookup() is not None
 
-    def applied_df(self) -> DataFrame:
+    def _path(self, *parts):
+        """A Hadoop ``Path``."""
+        return self.spark._jvm.org.apache.hadoop.fs.Path(*parts)  # noqa: SLF001
+
+    def _journal_dir(self):
+        """``(FileSystem, journal Path)``, or ``(None, None)`` when the
+        table is missing."""
+        location = self._location or self._lookup()
+        if location is None:
+            return None, None
+        path = self._path(location, self.JOURNAL)
+        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()), path  # noqa: SLF001
+
+    def _read_journal(self) -> dict[str, str]:
+        """The committed entries, file name -> migration name."""
+        fs, journal = self._journal_dir()
+        if fs is None:
+            return {}
+        io = self.spark._jvm.org.apache.commons.io.IOUtils  # noqa: SLF001
+        entries = {}
+        for status in fs.globStatus(self._path(journal, "*.rec")) or []:
+            stream = fs.open(status.getPath())
+            try:
+                name = bytes(io.toByteArray(stream))
+            finally:
+                stream.close()
+            entries[status.getPath().getName()] = name.decode("utf-8")
+        return entries
+
+    def _table_df(self) -> DataFrame:
         return self.spark.table(self.table).select("migration")
 
-    def record(self, name: str) -> None:
-        # named column, parameterized literal (Core.pm:208-210)
-        self.spark.sql(
-            f"INSERT INTO {self.table} (migration) VALUES (:name)",  # noqa: S608
-            args={"name": name},
+    def applied_df(self) -> DataFrame:
+        journal = sorted(self._read_journal().values())
+        if not journal:
+            return self._table_df()
+        return self._table_df().union(
+            self.spark.createDataFrame([(n,) for n in journal], "migration string")
         )
 
+    def applied(self) -> set[str]:
+        # the journal first: a compaction between the two reads moves
+        # names into the table, never out of both
+        self._journal = self._read_journal()
+        self._rows = {r[0] for r in self._table_df().collect()}
+        return self._rows | set(self._journal.values())
+
+    def record(self, name: str) -> None:
+        fs, journal = self._journal_dir()
+        if fs is None:
+            raise LookupError(f"ledger table {self.table} does not exist")
+        staged = self._path(journal, f".tmp-{uuid.uuid4().hex}")
+        entry = self._path(journal, _entry_name(name))
+        out = fs.create(staged, False)
+        try:
+            out.write(name.encode("utf-8"))
+            out.hsync()
+        finally:
+            out.close()
+        if not fs.rename(staged, entry):  # COMMIT POINT
+            # Hadoop's rename does not replace: a retried record finds
+            # its entry committed already, with the same content
+            fs.delete(staged, False)
+            if not fs.exists(entry):
+                raise OSError(f"could not commit ledger journal entry {entry}")
+        if self._journal is not None:
+            self._journal[entry.getName()] = name
+
     def compact(self) -> None:
-        # the write-then-delete order is the crash-safety argument; see
+        # the order of the four steps is the crash-safety argument; see
         # the module docstring
+        journal = self._journal if self._journal is not None else self._read_journal()
+        if not journal:
+            return
+        rows = self._rows if self._rows is not None else {r[0] for r in self._table_df().collect()}
+        self._journal = self._rows = None  # stale from here on
+        new = sorted(set(journal.values()) - rows)
+        if new:
+            # named column, parameterized literals (Core.pm:208-210), so
+            # user-added ledger columns keep their defaults
+            marks = ", ".join(f"(:n{i})" for i in range(len(new)))
+            self.spark.sql(
+                f"INSERT INTO {self.table} (migration) "  # noqa: S608
+                f"SELECT /*+ COALESCE(1) */ * FROM VALUES {marks}",
+                args={f"n{i}": n for i, n in enumerate(new)},
+            )
+        fs, journal_dir = self._journal_dir()
+        for entry in journal:
+            fs.delete(self._path(journal_dir, entry), False)
+
         df = self.spark.table(self.table)
         files = df.inputFiles()
         if len(files) <= 1:
             return
         # all columns, so user-added ledger columns survive
         df.coalesce(1).write.insertInto(self.table)
-        jvm = self.spark._jvm  # noqa: SLF001
         conf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
         for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
+            path = self._path(f)
             path.getFileSystem(conf).delete(path, False)
         self.spark.catalog.refreshTable(self.table)
 
@@ -160,8 +286,7 @@ class FileLedger(Ledger):
     def record(self, name: str) -> None:
         self.create()
         staged = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        digest = hashlib.sha256(name.encode("utf-8")).hexdigest()[:32]
-        committed = os.path.join(self.path, digest + self._SUFFIX)
+        committed = os.path.join(self.path, _entry_name(name))
         fd = os.open(staged, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
         try:
             with os.fdopen(fd, "w", encoding="utf-8") as f:

@@ -194,7 +194,7 @@ def test_pending_set_spark_job_count(spark, tree, tmp_path):
     m = _migrator(spark, tree, database=db)
     try:
         m.create_or_update_database()
-        m.ledger.record("00-extra")  # a second data file
+        spark.sql(f"INSERT INTO {db}.applied_migration (migration) VALUES ('00-extra')")
         m2 = _migrator(spark, tree, database=db)
         assert _jobs_run_by(spark, m2.pending_migrations) <= 1
     finally:
@@ -225,10 +225,26 @@ def _ledger_rows(spark, db):
     return sorted(tuple(r) for r in spark.table(f"{db}.applied_migration").collect())
 
 
-def _data_files_on_disk(spark, db):
+def _ledger_dir(spark, db):
     rows = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.applied_migration").collect()
-    location = next(r["data_type"] for r in rows if r["col_name"] == "Location")
-    return [f for f in os.listdir(location.removeprefix("file:")) if not f.startswith((".", "_"))]
+    return next(r["data_type"] for r in rows if r["col_name"] == "Location").removeprefix("file:")
+
+
+def _data_files_on_disk(spark, db):
+    return [f for f in os.listdir(_ledger_dir(spark, db)) if not f.startswith((".", "_"))]
+
+
+def _journal_on_disk(spark, db):
+    """The committed journal entries, name -> content."""
+    journal = os.path.join(_ledger_dir(spark, db), "_migrator_journal")
+    if not os.path.isdir(journal):
+        return {}
+    entries = {}
+    for f in sorted(os.listdir(journal)):
+        if not f.startswith("."):  # staging files and checksums
+            with open(os.path.join(journal, f), encoding="utf-8") as fh:
+                entries[f] = fh.read()
+    return entries
 
 
 def test_deploy_compacts_catalog_ledger_to_one_file(spark, extra_column_tree):
@@ -250,19 +266,26 @@ def test_dry_run_and_status_leave_ledger_files_alone(spark, extra_column_tree):
     m = _migrator(spark, extra_column_tree, database=db)
     try:
         m.create_or_update_database()
-        m.ledger.record("99-recorded-elsewhere")  # a second data file
+        spark.sql(  # a second data file
+            f"INSERT INTO {db}.applied_migration (migration) VALUES ('99-recorded-elsewhere')"
+        )
+        m.ledger.record("98-journaled")  # and a journal entry
         (extra_column_tree / "migrations" / "03-third").mkdir()
         (extra_column_tree / "migrations" / "03-third" / "01-t.sql").write_text(
             "CREATE TABLE third_t (x INT);"
         )
         before = _ledger_files(spark, db)
         assert len(before) == 2
+        journal = _journal_on_disk(spark, db)
+        assert len(journal) == 1
 
         _migrator(spark, extra_column_tree, database=db, dry_run=True).create_or_update_database()
         assert _ledger_files(spark, db) == before
+        assert _journal_on_disk(spark, db) == journal
         status = _migrator(spark, extra_column_tree, database=db)
         assert status.has_pending_migrations == 1
         assert _ledger_files(spark, db) == before
+        assert _journal_on_disk(spark, db) == journal
     finally:
         m.drop_database()
 
@@ -298,6 +321,175 @@ def test_crash_between_compacted_write_and_deletes(spark, extra_column_tree, mon
         assert m2.pending_migrations() == []
         m2.create_or_update_database()
         assert _ledger_rows(spark, db) == rows  # nothing applied, nothing recorded
+    finally:
+        m.drop_database()
+
+
+# -- catalog ledger journal ---------------------------------------------------
+def test_catalog_ledger_record_runs_no_spark_job(spark, tree):
+    """A record is a journal commit on the driver: no Spark job, visible to
+    both readers at once, and a retry finds the same entry."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        assert _jobs_run_by(spark, lambda: m.ledger.record("03-third")) == 0
+        m.ledger.record("03-third")
+        assert list(_journal_on_disk(spark, db).values()) == ["03-third"]
+        assert "03-third" not in _ledger_names(spark, db)
+        assert m.ledger.applied() == {"01-first", "02-second", "03-third"}
+        assert sorted(r[0] for r in m.ledger.applied_df().collect()) == [
+            "01-first", "02-second", "03-third"
+        ]
+    finally:
+        m.drop_database()
+
+
+def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
+    """Two migrations into an empty ledger table: the records run no job
+    and the compaction one INSERT; the table is one file and the journal
+    is empty afterwards."""
+    from database_migrator_spark.migrator.ledger import CatalogLedger
+
+    jobs = []
+    for method in ("record", "compact"):
+        real = getattr(CatalogLedger, method)
+
+        def counted(self, *args, _real=real):
+            jobs.append(_jobs_run_by(spark, lambda: _real(self, *args)))
+
+        monkeypatch.setattr(CatalogLedger, method, counted)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        assert sum(jobs) == 1
+        assert _ledger_names(spark, db) == ["01-first", "02-second"]
+        assert len(_data_files_on_disk(spark, db)) == 1
+        assert _journal_on_disk(spark, db) == {}
+    finally:
+        m.drop_database()
+
+
+def test_no_op_deploy_probes_neither_table_nor_database_again(spark, tree, monkeypatch):
+    """The ledger's existence comes from its one catalog lookup, and the
+    database is probed once per deploy, not once per file run in it."""
+    from pyspark.sql.catalog import Catalog
+
+    probes = []
+    real = Catalog.databaseExists
+
+    def database_exists(self, name):
+        probes.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(Catalog, "databaseExists", database_exists)
+
+    def no_table_exists(self, *args, **kwargs):
+        raise AssertionError("tableExists called")
+
+    monkeypatch.setattr(Catalog, "tableExists", no_table_exists)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()  # schema + two migrations
+        assert probes == [db]
+        _migrator(spark, tree, database=db).create_or_update_database()
+        assert probes == [db, db]
+    finally:
+        monkeypatch.undo()
+        m.drop_database()
+
+
+def _crash_at_ledger_insert(db, monkeypatch, after: bool):
+    """Make the ledger table's INSERT raise, before it runs or after."""
+    from pyspark.sql import SparkSession
+
+    real_sql = SparkSession.sql
+
+    def sql(self, query, *args, **kwargs):
+        if query.startswith(f"INSERT INTO {db}.applied_migration"):
+            if after:
+                real_sql(self, query, *args, **kwargs)
+            raise RuntimeError("simulated crash")
+        return real_sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+
+
+def _assert_recovers(spark, tree, db):
+    """The next deploy applies nothing (a second CREATE TABLE bar would
+    fail), and afterwards the ledger table holds the tree once, in one
+    file, with the journal empty."""
+    spark.catalog.refreshTable(f"{db}.applied_migration")
+    m2 = _migrator(spark, tree, database=db)
+    assert m2.pending_migrations() == []
+    m2.create_or_update_database()
+    assert _ledger_names(spark, db) == sorted(os.listdir(tree / "migrations"))
+    assert len(_data_files_on_disk(spark, db)) == 1
+    assert _journal_on_disk(spark, db) == {}
+
+
+def test_crash_between_journal_commit_and_table_insert(spark, tree, monkeypatch):
+    """The journal entries are deleted only after the INSERT: a crash at
+    the INSERT leaves the names in the journal, where readers see them."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        _crash_at_ledger_insert(db, monkeypatch, after=False)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            m.create_or_update_database()
+        monkeypatch.undo()
+        assert _ledger_names(spark, db) == []
+        assert sorted(_journal_on_disk(spark, db).values()) == ["01-first", "02-second"]
+        _assert_recovers(spark, tree, db)
+    finally:
+        m.drop_database()
+
+
+def test_crash_between_table_insert_and_journal_deletes(spark, tree, monkeypatch):
+    """Names in both places after a crash: the next deploy inserts only
+    the journal names the table lacks, so no row is doubled."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        _crash_at_ledger_insert(db, monkeypatch, after=True)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            m.create_or_update_database()
+        monkeypatch.undo()
+        spark.catalog.refreshTable(f"{db}.applied_migration")
+        assert _ledger_names(spark, db) == ["01-first", "02-second"]
+        assert sorted(_journal_on_disk(spark, db).values()) == ["01-first", "02-second"]
+        _assert_recovers(spark, tree, db)
+    finally:
+        m.drop_database()
+
+
+def test_failed_migration_keeps_earlier_records_in_the_table(spark, tree, monkeypatch):
+    """A deploy that fails at its third migration still writes the first
+    two into the ledger table, and a failing compaction does not hide the
+    migration's own error."""
+    from database_migrator_spark.migrator.ledger import CatalogLedger
+
+    bad = tree / "migrations" / "03-bad"
+    bad.mkdir()
+    prog = bad / "migrate.sh"
+    prog.write_text(FAILING_PROGRAM)
+    prog.chmod(prog.stat().st_mode | stat.S_IXUSR)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        with pytest.raises(MigrationError, match="Use of uninitialized"):
+            m.create_or_update_database()
+        assert _ledger_names(spark, db) == ["01-first", "02-second"]
+        assert _journal_on_disk(spark, db) == {}
+
+        def broken_compact(self):
+            raise RuntimeError("compaction failed")
+
+        monkeypatch.setattr(CatalogLedger, "compact", broken_compact)
+        with pytest.raises(MigrationError, match="Use of uninitialized"):
+            _migrator(spark, tree, database=db).create_or_update_database()
     finally:
         m.drop_database()
 
