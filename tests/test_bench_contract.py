@@ -104,15 +104,16 @@ def test_gate_history_matches_committed_files():
 
 
 def test_gate_order_front_loads_stale_signal_set():
-    """Round 15: a pure optimization round — _SEMANTIC_RESET is empty
-    (every r14 reset query re-gated green in CORRECTNESS_r14 and no
-    result-affecting edits landed since).  The 50-row gate budget goes
-    to (a) the one never-gated addition q310, (b) the 14-name r08-stale
-    residue that spilled from r14's window (q194/q195, q38-q44,
-    q46-q50), then (c) the first 35 of the r9-gated block (q100-q111,
-    q196-q221, sorted by full name) — exactly 50; the r9 block's last
-    12 spill to r16.  Global rule: a query with oracle=None can NEVER
-    occupy a window slot (q53/q62 burned 2 of 50 rows in r11 on
+    """Post-r15 window: _SEMANTIC_RESET is empty (no result-affecting
+    edits since the r15 gate) and no never-gated addition exists (q310,
+    the top registered qid, was gated in r15).  Every r6-r8 entry left in
+    the regenerated history is oracle-less, so the 50-row gate budget
+    goes to (a) the 12-name r9 residue that spilled from r15's window
+    (q222-q233), then (b) the first 38 of the 46 oracle-bearing r10-gated
+    names (q112-q143, q234-q244, sorted by full name; q117 is
+    oracle-less) — exactly 50; the r10 block's last 8 spill to the next
+    round.  Global rule: a query with oracle=None can NEVER occupy a
+    window slot (q53/q62 burned 2 of 50 rows in r11 on
     rows-only-by-design queries whose gate rows cannot go green); all
     nine such queries sort dead last.  Pinning the exact first-50 list
     (not just the set) so a refactor cannot silently reorder the
@@ -120,34 +121,35 @@ def test_gate_order_front_loads_stale_signal_set():
     qs = all_queries()
     names = list(qs)
     gate = [n.split("_", 1)[0] for n in names[:50]]
-    # (b) the r08-stale residue, full-name sort order within the rank
-    r08_block = sorted(
-        {"q194", "q195"}
-        | ({f"q{i:02d}" for i in range(38, 51)} - {"q45"})
-    )
-    assert len(r08_block) == 14
-    r08_in_order = [
-        n.split("_", 1)[0]
-        for n in sorted(n for n in qs if n.split("_", 1)[0] in set(r08_block))
-    ]
-    # (c) the r9-gated block, full-name sort order within the rank
     from database_migrator_spark.plans.gate_history import LAST_GATED
 
-    r9_block = {q for q, r in LAST_GATED.items() if r == 9}
-    r9_in_order = [
-        n.split("_", 1)[0]
-        for n in sorted(n for n in qs if n.split("_", 1)[0] in r9_block)
-    ]
-    assert gate == ["q310"] + r08_in_order + r9_in_order[:35]
+    def gated_in_order(rnd: int) -> list[str]:
+        """Oracle-bearing qids last gated in ``rnd``, full-name order."""
+        block = {q for q, r in LAST_GATED.items() if r == rnd}
+        return [
+            n.split("_", 1)[0]
+            for n in sorted(
+                n for n, dq in qs.items()
+                if n.split("_", 1)[0] in block and dq.oracle is not None
+            )
+        ]
+
+    # (a) the r9 residue that spilled from r15's window
+    r9_in_order = gated_in_order(9)
+    assert r9_in_order == [f"q{i}" for i in range(222, 234)]
+    # (b) the r10-gated block, full-name sort order within the rank
+    r10_in_order = gated_in_order(10)
+    assert len(r10_in_order) == 46
+    assert gate == r9_in_order + r10_in_order[:38]
     # no oracle-less query may sit inside the window — ever
     window_dqs = [qs[n] for n in names[:50]]
     assert all(dq.oracle is not None for dq in window_dqs)
     # all nine rows-only-by-design queries sort dead last
     no_oracle = [n.split("_", 1)[0] for n, dq in qs.items() if dq.oracle is None]
     assert sorted(no_oracle) == sorted(n.split("_", 1)[0] for n in names[-len(no_oracle):])
-    # the spilled r9 residue (12 names) leads the post-window order
+    # the spilled r10 residue (8 names) leads the post-window order
     post_window = [n.split("_", 1)[0] for n in names[50:]]
-    assert post_window[:12] == r9_in_order[35:]
+    assert post_window[:8] == r10_in_order[38:]
     # every freshly-gated block sorts after the 50-row window
     tail = set(post_window)
-    assert {"q234", "q249", "q59", "q51", "q112", "q143", "q250", "q262", "q01", "q52", "q85", "q02", "q86", "q263", "q293", "q294", "q305", "q10", "q145", "q304", "q306", "q159", "q162"} <= tail
+    assert {"q249", "q59", "q51", "q250", "q262", "q01", "q52", "q85", "q02", "q86", "q263", "q293", "q294", "q305", "q10", "q145", "q304", "q306", "q159", "q162", "q310", "q194", "q38", "q100", "q221"} <= tail
