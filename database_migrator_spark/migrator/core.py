@@ -13,6 +13,17 @@ itself (none for the FileLedger). Everything else is ordered driver-side
 orchestration — deliberately so: migrations are sequential by contract
 (Core.pm:158-162), so the loop must never be parallelized across
 migrations.
+
+The reference runs each statement over one open handle (Core.pm:176-179);
+here each statement is a Spark job on a session sized for analytics, where
+a four-row ``INSERT ... VALUES`` is four tasks writing four files. So a
+deploy that has work — it creates the database or has pending migrations —
+runs inside one deploy scope (``Migrator._deploy_scope``): local-relation
+writes run as one task, file scans split as outside it, and the target
+database is entered once. Schema DDL, SQL, program and code migrations and
+the ledger's compaction all run inside it; a no-op deploy, a dry run and
+``status`` never enter it, and it leaves the session's confs and current
+database as it found them.
 """
 
 from __future__ import annotations
@@ -32,6 +43,11 @@ from .model import FileKind, Migration, MigrationFile, numeric_or_alpha_key, sca
 
 class MigrationError(RuntimeError):
     pass
+
+
+# the session confs a deploy scope sets (see Migrator._deploy_scope)
+_LEAF_PARALLELISM = "spark.sql.leafNodeDefaultParallelism"
+_MIN_FILE_SPLITS = "spark.sql.files.minPartitionNum"
 
 
 # Sentinel marking a CLI attribute as required on the command line.
@@ -148,40 +164,91 @@ class Migrator:
     @contextmanager
     def _in_database(self):
         """Run with ``self.database`` as the current database so unqualified
-        DDL in schema/migration files lands in the right namespace."""
+        DDL in schema/migration files lands in the right namespace. Switches
+        only when another database is current, and switches back only when
+        the current database changed (a ``USE`` inside a migration too):
+        ``currentDatabase()`` is session state, while each switch is one
+        metastore call on the Hive catalog."""
         prev = self.spark.catalog.currentDatabase()
         # the memoized probe, set once CREATE DATABASE has run; false only
         # under a dry run of a new database, which then has nothing to enter
-        if self._database_exists:
+        if prev != self.database and self._database_exists:
             self.spark.catalog.setCurrentDatabase(self.database)
         try:
             yield
         finally:
-            self.spark.catalog.setCurrentDatabase(prev)
+            if self.spark.catalog.currentDatabase() != prev:
+                self.spark.catalog.setCurrentDatabase(prev)
+
+    @contextmanager
+    def _deploy_scope(self, active: bool):
+        """Size the session's Spark work to a deploy while it runs.
+
+        A deploy's own writes are small local relations (``INSERT ...
+        VALUES``, the ledger's compaction); at the session's default
+        parallelism each becomes one task and one file per core. Inside
+        the scope ``spark.sql.leafNodeDefaultParallelism`` is 1, so such a
+        write is one task and one file. That conf is also the minimum split
+        count of file scans, so ``spark.sql.files.minPartitionNum`` is
+        pinned to the split count the caller's session would use, unless
+        the caller set it: scans in code migrations, which run inside the
+        scope, split as they do outside it. The target database is entered
+        here once, which makes each migration's ``_in_database`` free.
+
+        Entered only when ``active`` (the deploy creates the database or
+        has pending migrations) and not under a dry run. Every conf and
+        the current database are restored on exit, a failed deploy too."""
+        if not active or self.dry_run:
+            yield
+            return
+        conf = self.spark.conf
+        saved = {k: conf.get(k, None) for k in (_LEAF_PARALLELISM, _MIN_FILE_SPLITS)}
+        if saved[_MIN_FILE_SPLITS] is None:
+            splits = saved[_LEAF_PARALLELISM] or self.spark.sparkContext.defaultParallelism
+            conf.set(_MIN_FILE_SPLITS, str(splits))
+        conf.set(_LEAF_PARALLELISM, "1")
+        try:
+            with self._in_database():
+                yield
+        finally:
+            for key, value in saved.items():
+                if value is None:
+                    conf.unset(key)
+                else:
+                    conf.set(key, value)
+
+    def create_database(self) -> None:  # Core.pm:26-31, a required method
+        self.spark.sql(f"CREATE DATABASE `{self.database}`")
+        # keep the memoized probe truthful for subsequent calls on this
+        # instance (retry loops, library use)
+        self.__dict__["_database_exists"] = True
 
     def create_or_update_database(self) -> None:
-        if not self._database_exists:
+        creating = not self._database_exists
+        if creating:
             self.logger.info("creating database %s", self.database)
             if not self.dry_run:
-                self.spark.sql(f"CREATE DATABASE `{self.database}`")
-                # keep the memoized probe truthful for subsequent calls on
-                # this instance (retry loops, library use)
-                self.__dict__["_database_exists"] = True
-            if self.schema_file:
-                self.logger.info("running schema DDL from %s", self.schema_file)
-                with self._in_database():
-                    self._run_ddl_file(self.schema_file)
+                self.create_database()
         else:
             self.logger.debug("database %s already exists", self.database)
-        self._run_migrations()
+        # a new database's ledger comes from its schema, which may record
+        # migrations, so its pending set is read after the schema ran
+        pending = [] if creating else self.pending_migrations()
+        with self._deploy_scope(creating or bool(pending)):
+            if creating:
+                if self.schema_file:
+                    self.logger.info("running schema DDL from %s", self.schema_file)
+                    # in the database the scope entered; a dry run executes nothing
+                    self._run_ddl_file(self.schema_file)
+                pending = self.pending_migrations()
+            self._run_migrations(pending)
 
     def drop_database(self) -> None:  # test harness support (Core.pm:29)
         self.spark.sql(f"DROP DATABASE IF EXISTS `{self.database}` CASCADE")
         self.__dict__.pop("_database_exists", None)  # _in_database trusts the memo
 
     # -- apply loop: strictly ordered (Core.pm:158-162) -----------------------
-    def _run_migrations(self) -> None:
-        pending = self.pending_migrations()
+    def _run_migrations(self, pending: list[Migration]) -> None:
         done = False
         try:
             for migration in pending:

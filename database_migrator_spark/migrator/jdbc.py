@@ -66,18 +66,6 @@ class JdbcMigrator(Migrator):
         with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties):
             pass
 
-    def create_or_update_database(self) -> None:  # Core.pm:141-156
-        if not self._database_exists:
-            self.logger.info("creating database %s", self.jdbc_url)
-            if not self.dry_run:
-                self.create_database()
-            if self.schema_file:
-                self.logger.info("running schema DDL from %s", self.schema_file)
-                self._run_ddl_file(self.schema_file)
-        else:
-            self.logger.debug("database already exists")
-        self._run_migrations()
-
     def run_sql(self, stmt: str):  # type: ignore[override]
         """Pass-through execution on the target DBMS (no Spark dialect)."""
         with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties) as conn:

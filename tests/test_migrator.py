@@ -494,6 +494,237 @@ def test_failed_migration_keeps_earlier_records_in_the_table(spark, tree, monkey
         m.drop_database()
 
 
+# -- the deploy scope ------------------------------------------------------------
+LEAF = "spark.sql.leafNodeDefaultParallelism"
+MIN_SPLITS = "spark.sql.files.minPartitionNum"
+
+
+def _session_state(spark):
+    return (
+        spark.conf.get(LEAF, None),
+        spark.conf.get(MIN_SPLITS, None),
+        spark.catalog.currentDatabase(),
+    )
+
+
+def test_bootstrapped_insert_values_writes_one_file(spark, tree):
+    """A deploy's local-relation write is one task: a four-row INSERT ...
+    VALUES leaves one data file, not one per core."""
+    if spark.sparkContext.defaultParallelism == 1:
+        pytest.skip("one core writes one file with or without the scope")
+    rows = tree / "migrations" / "03-rows"
+    rows.mkdir()
+    (rows / "01-rows.sql").write_text(
+        "INSERT INTO foo VALUES (1, 'one'), (2, 'two'), (3, 'three'), (4, 'four');"
+    )
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        assert spark.table(f"{db}.foo").count() == 4
+        assert len(spark.table(f"{db}.foo").inputFiles()) == 1
+    finally:
+        m.drop_database()
+
+
+@pytest.mark.parametrize("caller_set", [False, True], ids=["unset", "set"])
+def test_deploy_restores_confs_and_current_database(spark, tree, caller_set):
+    """The scope leaves the session as the caller had it, explicitly set
+    values too, after a deploy that succeeds and after one that fails."""
+    other = f"migother_{uuid.uuid4().hex[:8]}"
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    prev = spark.catalog.currentDatabase()
+    spark.sql(f"CREATE DATABASE {other}")
+    spark.catalog.setCurrentDatabase(other)
+    if caller_set:
+        spark.conf.set(LEAF, "3")
+        spark.conf.set(MIN_SPLITS, "5")
+    m = _migrator(spark, tree, database=db)
+    try:
+        before = _session_state(spark)
+        assert before == (("3", "5", other) if caller_set else (None, None, other))
+        m.create_or_update_database()
+        assert _session_state(spark) == before
+
+        bad = tree / "migrations" / "03-bad"
+        bad.mkdir()
+        prog = bad / "migrate.sh"
+        prog.write_text(FAILING_PROGRAM)
+        prog.chmod(prog.stat().st_mode | stat.S_IXUSR)
+        with pytest.raises(MigrationError, match="Use of uninitialized"):
+            _migrator(spark, tree, database=db).create_or_update_database()
+        assert _session_state(spark) == before
+    finally:
+        spark.conf.unset(LEAF)
+        spark.conf.unset(MIN_SPLITS)
+        spark.catalog.setCurrentDatabase(prev)
+        m.drop_database()
+        spark.sql(f"DROP DATABASE {other} CASCADE")
+
+
+def test_no_op_dry_run_and_status_set_no_conf(spark, tree, monkeypatch):
+    """Only a deploy with work pays for the scope: a no-op deploy, a dry
+    run (of a new database and of a pending migration) and ``status``
+    set and unset nothing on the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    calls = []
+    for method in ("set", "unset"):
+        real = getattr(RuntimeConfig, method)
+
+        def spy(self, *args, _real=real, _method=method):
+            calls.append((_method, *args))
+            return _real(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, method, spy)
+    try:
+        _migrator(spark, tree, database=db, dry_run=True).create_or_update_database()
+        assert calls == []
+        m.create_or_update_database()
+        assert calls  # the spy sees the scope of a deploy with work
+        calls.clear()
+
+        _migrator(spark, tree, database=db).create_or_update_database()  # no-op
+        (tree / "migrations" / "03-third").mkdir()
+        (tree / "migrations" / "03-third" / "01-t.sql").write_text("CREATE TABLE third_t (x INT);")
+        _migrator(spark, tree, database=db, dry_run=True).create_or_update_database()
+        assert _migrator(spark, tree, database=db).has_pending_migrations == 1  # status
+        assert calls == []
+        assert not spark.catalog.tableExists(f"{db}.third_t")
+    finally:
+        monkeypatch.undo()
+        m.drop_database()
+
+
+SPLITS_MIGRATION = """
+def migrate(migrator):
+    migrator.seen_splits = migrator.spark.table("{table}").rdd.getNumPartitions()
+"""
+
+
+@pytest.mark.parametrize("caller_leaf", [None, "2"], ids=["default", "caller-set"])
+def test_code_migration_scans_split_as_outside_the_deploy(spark, tree, caller_leaf):
+    """The scope's one-task writes do not shrink file scans: a code
+    migration reading a multi-file table gets the splits it gets outside
+    the deploy, whether the caller set the leaf parallelism or not."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    src = f"migsrc_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {src}")
+    spark.range(0, 4000, 1, 8).write.saveAsTable(f"{src}.wide")
+    code = tree / "migrations" / "03-code"
+    code.mkdir()
+    (code / "migrate.py").write_text(SPLITS_MIGRATION.format(table=f"{src}.wide"))
+    if caller_leaf:
+        spark.conf.set(LEAF, caller_leaf)
+    m = _migrator(spark, tree, database=db)
+    try:
+        assert len(spark.table(f"{src}.wide").inputFiles()) == 8
+        outside = spark.table(f"{src}.wide").rdd.getNumPartitions()
+        assert outside > 1
+        m.create_or_update_database()
+        assert m.seen_splits == outside
+    finally:
+        spark.conf.unset(LEAF)
+        m.drop_database()
+        spark.sql(f"DROP DATABASE {src} CASCADE")
+
+
+USE_MIGRATION = "USE {other};\nCREATE TABLE used_t (x INT);\n"
+
+
+def test_one_database_switch_per_deploy_and_use_does_not_leak(spark, tree, monkeypatch):
+    """The deploy enters its database once and leaves it once; a migration
+    that runs ``USE other`` does not move the next migration out of the
+    target database, nor the caller out of theirs."""
+    from pyspark.sql.catalog import Catalog
+
+    other = f"migother_{uuid.uuid4().hex[:8]}"
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    prev = spark.catalog.currentDatabase()
+    spark.sql(f"CREATE DATABASE {other}")
+    switches = []
+    real = Catalog.setCurrentDatabase
+
+    def set_current(self, name):
+        switches.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(Catalog, "setCurrentDatabase", set_current)
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()  # schema + two migrations
+        assert switches == [db, prev]
+
+        use = tree / "migrations" / "03-use"
+        use.mkdir()
+        (use / "01-use.sql").write_text(USE_MIGRATION.format(other=other))
+        after = tree / "migrations" / "04-after"
+        after.mkdir()
+        (after / "01-t.sql").write_text("CREATE TABLE after_t (x INT);\n")
+        spark.catalog.setCurrentDatabase(db)  # a caller already in the target
+        _migrator(spark, tree, database=db).create_or_update_database()
+        assert spark.catalog.tableExists(f"{other}.used_t")
+        assert spark.catalog.tableExists(f"{db}.after_t")
+        assert not spark.catalog.tableExists(f"{other}.after_t")
+        assert spark.catalog.currentDatabase() == db
+    finally:
+        monkeypatch.undo()
+        spark.catalog.setCurrentDatabase(prev)
+        m.drop_database()
+        spark.sql(f"DROP DATABASE {other} CASCADE")
+
+
+HIVE_CALLS_SCRIPT = """
+import os, sys
+from database_migrator_spark.migrator.core import Migrator
+from database_migrator_spark.session import get_session
+
+spark = get_session("hive-client-calls", cpus=2, persistent_catalog=True)
+calls = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS()
+spark.catalog.databaseExists("default")  # the metastore's start-up calls stay out
+before = calls.getCount()
+Migrator(spark, "calls_db", "migrations", "schema.sql", quiet=True).create_or_update_database()
+print(calls.getCount() - before)
+"""
+
+# Hive client calls of the bootstrap below when every schema file and
+# migration entered and left the database itself (two
+# ``setCurrentDatabase`` calls each, one metastore call apiece)
+PER_FILE_SWITCH_CALLS = 152
+
+
+def test_bootstrap_hive_client_calls(tmp_path):
+    """On the Hive catalog a 6-migration bootstrap switches databases once
+    in and once out: at least 12 metastore calls fewer than switching
+    around the schema and each migration. The Hive catalog is fixed when
+    a JVM starts, so this runs in its own process."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    (tmp_path / "schema.sql").write_text(
+        "CREATE TABLE applied_migration (migration VARCHAR(250) PRIMARY KEY);\n"
+    )
+    for i in range(1, 7):
+        d = tmp_path / "migrations" / f"{i:02d}-m"
+        d.mkdir(parents=True)
+        (d / "01.sql").write_text(f"CREATE TABLE t{i} (x INT);\nINSERT INTO t{i} VALUES (1), (2);\n")
+    env = dict(
+        os.environ,
+        PYTHONPATH=str(Path(__file__).resolve().parent.parent),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", HIVE_CALLS_SCRIPT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    calls = int(out.stdout.split()[-1])
+    assert calls <= PER_FILE_SWITCH_CALLS - 12
+
+
 def test_quiet_verbose_exclusive(spark, tree):
     with pytest.raises(ValueError):
         Migrator(spark, "x", str(tree), quiet=True, verbose=True)
