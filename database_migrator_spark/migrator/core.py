@@ -8,8 +8,13 @@ The single piece of query logic in the reference is the pending set
 computed here as a Python set difference on the driver: one directory
 listing minus the ledger's names, sorted by ``numeric_or_alpha_key``. It
 runs over a few hundred names, so a Spark job would cost more than the
-set arithmetic it does; the only Spark work left is the ledger read
-itself (none for the FileLedger). Everything else is ordered driver-side
+set arithmetic it does. The ledger read runs none either: the driver
+reads a plain parquet catalog ledger's files itself, the JDBC ledger is
+one ``SELECT`` and the FileLedger its entries; only a catalog ledger of
+another shape (a provider other than parquet, partitions, ``CHAR(n)``)
+is read by a Spark job. So a no-op deploy runs no Spark job unless the
+ledger table holds more than one data file, which it then folds into
+one (see ledger.py). Everything else is ordered driver-side
 orchestration — deliberately so: migrations are sequential by contract
 (Core.pm:158-162), so the loop must never be parallelized across
 migrations.

@@ -7,8 +7,11 @@ from __future__ import annotations
 import os
 import stat
 import uuid
+from pathlib import Path
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from database_migrator_spark.migrator.core import MigrationError, Migrator
 from database_migrator_spark.migrator.ddl import (
@@ -180,7 +183,8 @@ def _jobs_run_by(spark, fn) -> int:
 
 def test_pending_set_spark_job_count(spark, tree, tmp_path):
     """The pending set is driver-side set arithmetic: no Spark job over a
-    FileLedger, only the ledger read over a catalog table."""
+    FileLedger, nor over a parquet catalog ledger, which the driver reads
+    itself."""
     from database_migrator_spark.migrator.ledger import FileLedger
 
     assert _jobs_run_by(spark, lambda: spark.range(3).collect()) == 1  # the counter counts
@@ -196,9 +200,242 @@ def test_pending_set_spark_job_count(spark, tree, tmp_path):
         m.create_or_update_database()
         spark.sql(f"INSERT INTO {db}.applied_migration (migration) VALUES ('00-extra')")
         m2 = _migrator(spark, tree, database=db)
-        assert _jobs_run_by(spark, m2.pending_migrations) <= 1
+        assert _jobs_run_by(spark, m2.pending_migrations) == 0
+        assert m2.pending_migrations() == []
+        assert m2.ledger.applied() == {"00-extra", "01-first", "02-second"}
     finally:
         m.drop_database()
+
+
+def _write_parquet(path, names, column="migration", **extra):
+    """A parquet file holding ``names`` as another writer leaves it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {column: pa.array(names, pa.string())}
+    cols.update({k: pa.array([v] * len(names), pa.string()) for k, v in extra.items()})
+    pq.write_table(pa.table(cols), str(path))
+
+
+# the ledger table as a schema creates it, and how another writer adds one
+# row to it: a parquet table the driver reads, a JSON one Spark reads
+STALE_READ_LEDGERS = {
+    "parquet": (
+        "CREATE TABLE applied_migration (migration STRING);",
+        lambda path, name: _write_parquet(path / "part-other-c000.snappy.parquet", [name]),
+    ),
+    "json": (
+        "CREATE TABLE applied_migration (migration STRING) USING json;",
+        lambda path, name: (path / "part-other-c000.json").write_text(
+            f'{{"migration":"{name}"}}\n'
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(STALE_READ_LEDGERS))
+def test_pending_set_sees_rows_another_writer_added(spark, tree, kind):
+    """Spark caches a table's file listing for the session, so a ledger
+    row another writer adds would stay unseen and its migration would run
+    again. Each read lists the table afresh: the driver's own listing, or
+    a refresh before Spark reads."""
+    schema, write_row = STALE_READ_LEDGERS[kind]
+    (tree / "schema.sql").write_text(schema)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        (tree / "migrations" / "03-third").mkdir()
+        assert [p.name for p in m.pending_migrations()] == ["03-third"]
+        assert _ledger_names(spark, db) == ["01-first", "02-second"]  # Spark has listed it
+        write_row(Path(_ledger_dir(spark, db)), "03-third")
+        assert m.pending_migrations() == []
+    finally:
+        m.drop_database()
+
+
+def test_no_op_deploy_folds_a_many_file_ledger(spark, tmp_path):
+    """A ledger table another writer left in one file per row is folded
+    by the next deploy, a no-op one too: one file, the same rows."""
+    names = [f"{i:02d}-m" for i in range(1, 6)]
+    for n in names:
+        (tmp_path / "migrations" / n).mkdir(parents=True)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db}")
+    m = _migrator(spark, tmp_path, database=db)
+    try:
+        spark.sql(f"CREATE TABLE {db}.applied_migration (migration STRING, applied_by STRING)")
+        for n in names:
+            _write_parquet(Path(_ledger_dir(spark, db), f"part-{n}.parquet"), [n], applied_by="ops")
+        assert len(_data_files_on_disk(spark, db)) == 5
+        m.create_or_update_database()
+        assert len(_data_files_on_disk(spark, db)) == 1
+        assert _ledger_rows(spark, db) == [(n, "ops") for n in names]
+        assert _migrator(spark, tmp_path, database=db).pending_migrations() == []
+    finally:
+        m.drop_database()
+
+
+# -- the driver's read of a parquet ledger against Spark's -------------------
+def _spark_names(spark, table):
+    spark.catalog.refreshTable(table)
+    return {r[0] for r in spark.table(table).select("migration").collect()}
+
+
+def _applied_and_jobs(spark, ledger):
+    """``ledger.applied()`` and the Spark jobs it ran."""
+    out = []
+    jobs = _jobs_run_by(spark, lambda: out.append(ledger.applied()))
+    return out[0], jobs
+
+
+_LEDGER_FILE = st.tuples(
+    st.sampled_from(["migration", "MIGRATION", "Migration"]),
+    st.lists(st.one_of(st.none(), st.text(max_size=12)), max_size=5),
+    st.sets(st.sampled_from(["applied_by", "note"])),
+)
+
+
+@pytest.fixture(scope="module")
+def parquet_ledger(spark):
+    """A parquet ledger table with a user column, for many examples."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db}")
+    spark.sql(f"CREATE TABLE {db}.applied_migration (migration STRING, applied_by STRING)")
+    yield db
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+@given(st.lists(_LEDGER_FILE, max_size=5))
+@settings(max_examples=25, deadline=None)
+def test_driver_read_equals_spark_read(spark, parquet_ledger, files):
+    """The driver's read of a parquet ledger yields Spark's set of names,
+    runs no Spark job and skips what Spark's file index skips: ``_`` and
+    ``.`` files, empty files and the journal directory."""
+    import shutil
+
+    from database_migrator_spark.migrator.ledger import CatalogLedger
+
+    db = parquet_ledger
+    table = f"{db}.applied_migration"
+    path = Path(_ledger_dir(spark, db))
+    shutil.rmtree(path)
+    path.mkdir()
+    for i, (column, names, extra) in enumerate(files):
+        _write_parquet(path / f"part-{i:05d}.parquet", names, column, **{c: c for c in extra})
+    (path / "_SUCCESS").write_bytes(b"")
+    (path / "_metadata").write_bytes(b"not parquet")
+    (path / ".staged.parquet").write_bytes(b"not parquet")
+    (path / "part-empty.parquet").write_bytes(b"")
+    ledger = CatalogLedger(spark, table)
+    assert ledger.exists()
+    ledger.record("99-journaled")
+    applied, jobs = _applied_and_jobs(spark, ledger)
+    assert jobs == 0
+    assert applied == _spark_names(spark, table) | {"99-journaled"}
+    assert applied == {n for _, names, _ in files for n in names} | {"99-journaled"}
+
+
+def _subdirectory(path):
+    (path / "sub").mkdir()
+    _write_parquet(path / "sub" / "part-sub.parquet", ["05-sub"])
+
+
+# ledgers Spark must read: the table's columns and provider, then what
+# another writer adds to its files
+SPARK_READ_LEDGERS = {
+    "json": ("(migration STRING, applied_by STRING) USING json", None),
+    "char": ("(migration CHAR(8), applied_by STRING)", None),
+    "subdirectory": ("(migration STRING, applied_by STRING)", _subdirectory),
+    "no-such-column": (
+        "(migration STRING, applied_by STRING)",
+        lambda path: _write_parquet(path / "part-other.parquet", ["ops"], column="applied_by"),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(SPARK_READ_LEDGERS))
+def test_ledgers_the_driver_cannot_read_take_the_spark_path(spark, kind):
+    """A table the driver cannot read as Spark does is read by Spark, and
+    its set is Spark's: another provider, a ``CHAR(n)`` column, files in
+    a subdirectory, a file without the column (a null name)."""
+    from database_migrator_spark.migrator.ledger import CatalogLedger
+
+    columns, add_files = SPARK_READ_LEDGERS[kind]
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    table = f"{db}.applied_migration"
+    spark.sql(f"CREATE DATABASE {db}")
+    try:
+        spark.sql(f"CREATE TABLE {table} {columns}")
+        spark.sql(f"INSERT INTO {table} VALUES ('01-a', 'ops')")
+        spark.sql(f"INSERT INTO {table} VALUES ('02-b', NULL)")
+        if add_files:
+            add_files(Path(_ledger_dir(spark, db)))
+        applied, jobs = _applied_and_jobs(spark, CatalogLedger(spark, table))
+        assert jobs >= 1
+        assert applied == _spark_names(spark, table)
+        assert {"01-a", "02-b"} <= {n and n.strip() for n in applied}
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+HIVE_LEDGERS_SCRIPT = """
+import json, os
+from database_migrator_spark.migrator.ledger import CatalogLedger
+from database_migrator_spark.session import get_session
+
+spark = get_session("hive-ledgers", cpus=2, persistent_catalog=True)
+sc = spark.sparkContext
+out = {}
+for kind, storage in (("default", ""), ("textfile", " STORED AS TEXTFILE")):
+    table = f"{kind}_ledger"
+    spark.sql(f"CREATE TABLE {table} (migration STRING){storage}")
+    spark.sql(f"INSERT INTO {table} VALUES ('01-a')")
+    spark.sql(f"INSERT INTO {table} VALUES ('02-b')")
+    ledger = CatalogLedger(spark, table)
+    assert ledger.exists()
+    sc.setJobGroup(kind, kind)
+    applied = ledger.applied()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ledger.compact()
+    files = [f for f in os.listdir(f"spark-warehouse/{table}") if not f.startswith((".", "_"))]
+    out[kind] = {
+        "applied": sorted(applied),
+        "jobs": len(sc.statusTracker().getJobIdsForGroup(kind)),
+        "rows": sorted(r[0] for r in spark.table(table).collect()),
+        "files": len(files),
+    }
+print(json.dumps(out))
+"""
+
+
+def test_hive_catalog_ledgers(tmp_path):
+    """On the Hive catalog, which the CLI uses, the ledger a schema's
+    ``CREATE TABLE`` makes is a parquet table the driver reads with no
+    Spark job; a Hive ``TEXTFILE`` ledger is read by Spark. Either keeps
+    its names when folded to one file. The catalog is fixed when a JVM
+    starts, so this runs in its own process."""
+    import json
+    import subprocess
+    import sys
+
+    env = dict(
+        os.environ,
+        PYTHONPATH=str(Path(__file__).resolve().parent.parent),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", HIVE_LEDGERS_SCRIPT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    got = json.loads(out.stdout.splitlines()[-1])
+    both = ["01-a", "02-b"]
+    assert got["default"] == {"applied": both, "jobs": 0, "rows": both, "files": 1}
+    assert got["textfile"]["jobs"] >= 1
+    assert got["textfile"]["applied"] == got["textfile"]["rows"] == both
+    assert got["textfile"]["files"] == 1
 
 
 # -- catalog ledger compaction -------------------------------------------------

@@ -85,6 +85,37 @@ def test_jdbc_ledger_record_runs_no_spark_job(spark, tmp_path):
     assert ledger.applied() == {"01-a"}
 
 
+def test_jdbc_ledger_reads_run_no_spark_job(spark, tree, tmp_path):
+    """The JDBC ledger read is one SELECT on a plain connection, so the
+    pending set runs no Spark job. The column is found as ``record``
+    finds it, also where Spark's writer made it a quoted lower-case
+    name."""
+    from database_migrator_spark.migrator.ledger import JdbcLedger
+
+    from .test_migrator import _jobs_run_by
+
+    url = f"jdbc:derby:{tmp_path}/readdb;create=true"
+    JdbcMigrator(
+        spark, jdbc_url=url, migrations_dir=str(tree / "migrations"),
+        schema_file=str(tree / "schema.sql"), quiet=True,
+    ).create_or_update_database()
+    (tree / "migrations" / "03-third").mkdir()
+    m = JdbcMigrator(spark, jdbc_url=url, migrations_dir=str(tree / "migrations"), quiet=True)
+    applied = []
+    assert _jobs_run_by(spark, lambda: applied.append(m.ledger.applied())) == 0
+    assert applied == [{"01-first", "02-second"}]
+    pending = []
+    assert _jobs_run_by(spark, lambda: pending.extend(m.pending_migrations())) == 0
+    assert [p.name for p in pending] == ["03-third"]
+
+    spark.createDataFrame([("00-written",)], "migration string").write.jdbc(
+        url, "spark_ledger", properties={}
+    )
+    ledger = JdbcLedger(spark, url, "spark_ledger")
+    ledger.record("01-recorded")
+    assert ledger.applied() == {"00-written", "01-recorded"}
+
+
 def test_jdbc_missing_ledger_table_gives_contract_error(spark, tmp_path):
     """As on the catalog target: a schema that does not create the ledger
     table breaks the reference contract (Migrator.pm:140-153), and the
