@@ -1,22 +1,24 @@
-"""CLI surface mirroring the reference's MooseX::Getopt::Dashes options
-(Core.pm:20-24, 121-139; README.md:115-125): the attribute-backed flags
-are AUTO-DERIVED from ``core.CLI_ATTRIBUTES`` (underscore attribute →
-dashed long flag, exactly the MooseX::Getopt::Dashes rule), with
-``--user`` aliased to ``--username`` (BUILDARGS, Changes:30-32) and
-quiet ⊕ verbose (BUILD). Verbs: ``migrate`` (create-or-update),
-``plan``/``status`` (print the pending set — the engine's one real
-query). Only engine extensions beyond the reference's attribute surface
-(--jdbc-url, --ledger-dir, --legacy-sql-match) are declared by hand.
+"""CLI surface after the reference's MooseX::Getopt::Dashes options
+(Core.pm:20-24, 121-139; README.md:115-125): one dashed long flag per
+option ``main`` reads, with ``--user`` aliased to ``--username``
+(BUILDARGS, Changes:30-32) and quiet ⊕ verbose (BUILD). Verbs: ``migrate``
+(create-or-update), ``plan``/``status`` (print the pending set — the
+engine's one real query). The reference's ``--host`` and ``--port`` are
+not declared: a JDBC URL carries both. --jdbc-url, --ledger-dir and
+--legacy-sql-match are engine extensions.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from database_migrator_spark.session import get_session
 
-from .core import CLI_ATTRIBUTES, REQUIRED, Migrator
+from .core import Migrator
+from .jdbc import JdbcMigrator
+from .ledger import FileLedger
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -25,16 +27,15 @@ def build_parser() -> argparse.ArgumentParser:
         description="Create or update a Spark database from a migration tree.",
     )
     p.add_argument("verb", choices=["migrate", "plan", "status"], help="action to run")
-    # attribute-derived flags: one dashed option per public attribute row
-    for attr, kind, default, helptext, aliases in CLI_ATTRIBUTES:
-        names = ["--" + a.replace("_", "-") for a in (attr, *aliases)]
-        if kind == "flag":
-            p.add_argument(*names, dest=attr, action="store_true", help=helptext)
-        elif default is REQUIRED:
-            p.add_argument(*names, dest=attr, required=True, help=helptext)
-        else:
-            p.add_argument(*names, dest=attr, default=default, help=helptext)
-    # engine extensions (not reference attributes)
+    p.add_argument("--database", help="Spark catalog database target")
+    p.add_argument("--migrations-dir", required=True, help="root of the migration tree")
+    p.add_argument("--schema-file", help="schema DDL applied when creating a fresh database")
+    p.add_argument("--migration-table", default="applied_migration", help="ledger table name")
+    p.add_argument("--username", "--user", help="connection user (JDBC targets)")
+    p.add_argument("--password", help="connection password (JDBC targets)")
+    p.add_argument("--dry-run", action="store_true", help="log every step without executing")
+    p.add_argument("--quiet", action="store_true", help="log errors only")
+    p.add_argument("--verbose", action="store_true", help="debug logging")
     p.add_argument(
         "--jdbc-url",
         help="JDBC target (e.g. jdbc:derby:/path;create=true) — DDL passes "
@@ -58,6 +59,16 @@ def main(argv: list[str] | None = None) -> int:
     if bool(args.database) == bool(args.jdbc_url):
         print("error: exactly one of --database / --jdbc-url is required", file=sys.stderr)
         return 2
+    # before the session: a mistyped path must not cost a JVM start
+    if not os.path.isdir(args.migrations_dir):
+        print(f"error: migrations dir not found: {args.migrations_dir}", file=sys.stderr)
+        return 1
+    if args.schema_file and not os.path.isfile(args.schema_file):
+        print(f"error: schema file not found: {args.schema_file}", file=sys.stderr)
+        return 1
+    # a Spark database outlives this process in the persistent catalog; a
+    # JDBC target keeps its tables in the target
+    spark = get_session("spark-migrate", persistent_catalog=not args.jdbc_url)
     common = dict(
         migrations_dir=args.migrations_dir,
         schema_file=args.schema_file,
@@ -67,35 +78,17 @@ def main(argv: list[str] | None = None) -> int:
         verbose=args.verbose,
         legacy_sql_match=args.legacy_sql_match,
     )
+    if args.ledger_dir:
+        common["ledger"] = FileLedger(spark, args.ledger_dir)
     if args.jdbc_url:
-        from .jdbc import JdbcMigrator
-
-        spark = get_session("spark-migrate")
         props = {}
         if args.username:
             props["user"] = args.username
         if args.password:
             props["password"] = args.password
-        if args.ledger_dir:
-            from .ledger import FileLedger
-
-            common["ledger"] = FileLedger(spark, args.ledger_dir)
         m = JdbcMigrator(spark, jdbc_url=args.jdbc_url, jdbc_properties=props, **common)
     else:
-        spark = get_session("spark-migrate", persistent_catalog=True)
-        if args.ledger_dir:
-            from .ledger import FileLedger
-
-            common["ledger"] = FileLedger(spark, args.ledger_dir)
         m = Migrator(spark, database=args.database, **common)
-    import os
-
-    if not os.path.isdir(args.migrations_dir):
-        print(f"error: migrations dir not found: {args.migrations_dir}", file=sys.stderr)
-        return 1
-    if args.schema_file and not os.path.isfile(args.schema_file):
-        print(f"error: schema file not found: {args.schema_file}", file=sys.stderr)
-        return 1
     try:
         if args.verb in ("plan", "status"):
             pending = m.pending_migrations()

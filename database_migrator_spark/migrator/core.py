@@ -55,39 +55,13 @@ _LEAF_PARALLELISM = "spark.sql.leafNodeDefaultParallelism"
 _MIN_FILE_SPLITS = "spark.sql.files.minPartitionNum"
 
 
-# Sentinel marking a CLI attribute as required on the command line.
-REQUIRED = object()
-
-# The CLI attribute table — this engine's equivalent of the reference
-# deriving its whole option surface from Moose attributes via
-# MooseX::Getopt::Dashes (Core.pm:20-24; attributes Core.pm:33-119): each
-# public attribute listed here BECOMES a dashed ``--flag`` in
-# ``migrator.cli.build_parser``, so the CLI can never drift from the
-# object surface — adding an attribute row IS adding the flag. Entries:
-# (attr, kind, default, help, aliases); kind "flag" → boolean store_true.
-# The ``user`` alias mirrors the reference's BUILDARGS alias
-# (Changes:30-32).
-CLI_ATTRIBUTES: tuple[tuple[str, str, object, str, tuple[str, ...]], ...] = (
-    ("database", "str", None, "Spark catalog database target", ()),
-    ("migrations_dir", "str", REQUIRED, "root of the migration tree", ()),
-    ("schema_file", "str", None, "schema DDL applied when creating a fresh database", ()),
-    ("migration_table", "str", "applied_migration", "ledger table name", ()),
-    ("username", "str", None, "connection user (JDBC targets)", ("user",)),
-    ("password", "str", None, "connection password (JDBC targets)", ()),
-    ("host", "str", None, "connection host (JDBC targets)", ()),
-    ("port", "str", None, "connection port (JDBC targets)", ()),
-    ("dry_run", "flag", False, "log every step without executing", ()),
-    ("quiet", "flag", False, "log errors only", ()),
-    ("verbose", "flag", False, "debug logging", ()),
-)
-
-
 class Migrator:
     """Create-or-update a database from a schema file + migration tree.
 
     Mirrors the reference's attribute surface (Core.pm:33-119): database,
-    migrations_dir, schema_file, migration_table, username/password/host/
-    port (JDBC targets), dry_run, quiet/verbose.
+    migrations_dir, schema_file, migration_table, dry_run, quiet/verbose.
+    Connection settings belong to the target: ``JdbcMigrator`` takes a
+    JDBC URL and its properties (user, password).
     """
 
     def __init__(

@@ -4,7 +4,8 @@ column is named explicitly in the INSERT so users may add extra columns,
 Changes:34-36).
 
 Backends behind one interface. Readers call ``applied()``, the set of
-recorded names; ``applied_df()`` is the same rows as a DataFrame.
+recorded names, the one read each backend implements; ``applied_df()``
+derives from it the same names as a DataFrame.
 
 - CatalogLedger — a Spark catalog table (parquet-backed). Reading it
   runs no Spark job when it is a plain parquet table (what ``CREATE
@@ -23,7 +24,11 @@ recorded names; ``applied_df()`` is the same rows as a DataFrame.
   TABLE`` removes it with the table). The commit is FileLedger's, over
   the Hadoop FileSystem of the table location: write the name to
   ``.tmp-<uuid>``, hsync and close it, rename it to
-  ``<sha256(name)[:32]>.rec``. A reader never sees a partial entry, so
+  ``<sha256(name)[:32]>.rec``. On a ``file:`` location the entry is
+  written through the raw local FileSystem, whose ``hsync`` reaches
+  the disk (the checksummed one's only flushes, and writes a ``.crc``
+  sidecar), and the journal directory is synced after the rename, as
+  FileLedger syncs its own. A reader never sees a partial entry, so
   the record is atomic, where the one-row ``INSERT`` it replaces was
   not; a retried record finds the same entry. Readers take the table
   rows ∪ the journal names. Once per deploy that is not a dry run
@@ -86,12 +91,19 @@ class Ledger(abc.ABC):
     def exists(self) -> bool: ...
 
     @abc.abstractmethod
-    def applied_df(self) -> DataFrame:
-        """DataFrame with the single column ``migration: string``."""
-
-    @abc.abstractmethod
     def applied(self) -> set[str]:
         """The recorded migration names."""
+
+    def applied_df(self) -> DataFrame:
+        """``applied()`` as a DataFrame with the single column
+        ``migration: string``, in no order: a ledger file may hold a null
+        name, which does not sort among strings. Built from an Arrow
+        table, so it plans as a local relation; a list of rows would
+        plan as an RDD scan."""
+        import pyarrow as pa
+
+        names = pa.array(list(self.applied()), pa.string())
+        return self.spark.createDataFrame(pa.table({"migration": names}))
 
     @abc.abstractmethod
     def record(self, name: str) -> None: ...
@@ -107,6 +119,25 @@ def _entry_name(name: str) -> str:
     """The committed file of ``name``: a pure function of it, so a
     retried record finds the same entry."""
     return hashlib.sha256(name.encode("utf-8")).hexdigest()[:32] + ".rec"
+
+
+def _fsync_dir(path: str) -> None:
+    """Sync the directory ``path``: a rename in it is atomic but not
+    durable until its directory entry is on disk (POSIX makes no ordering
+    promise for metadata), so without this a power failure after the
+    rename can roll the commit back. Best-effort on filesystems that
+    reject directory fsync (some network mounts): the atomicity guarantee
+    stands either way, only crash-durability degrades."""
+    try:
+        fd = os.open(path, os.O_RDONLY)
+    except OSError:
+        return
+    try:
+        os.fsync(fd)
+    except OSError:
+        pass
+    finally:
+        os.close(fd)
 
 
 def _is_data_file(name: str) -> bool:
@@ -277,17 +308,6 @@ class CatalogLedger(Ledger):
             rows.update(names)
         return rows
 
-    def _table_df(self) -> DataFrame:
-        return self.spark.table(self.table).select("migration")
-
-    def applied_df(self) -> DataFrame:
-        journal = sorted(self._read_journal().values())
-        if not journal:
-            return self._table_df()
-        return self._table_df().union(
-            self.spark.createDataFrame([(n,) for n in journal], "migration string")
-        )
-
     def applied(self) -> set[str]:
         # the journal first: a compaction between the two reads moves
         # names into the table, never out of both
@@ -298,7 +318,8 @@ class CatalogLedger(Ledger):
             # Spark lists a table's files once and caches the listing;
             # another writer's files are in a fresh one only
             self.spark.catalog.refreshTable(self.table)
-            rows = {r[0] for r in self._table_df().collect()}
+            table = self.spark.table(self.table).select("migration")
+            rows = {r[0] for r in table.collect()}
         self._rows = rows
         self._file_count = None if files is None else len(files)
         return rows | set(self._journal.values())
@@ -307,6 +328,11 @@ class CatalogLedger(Ledger):
         fs, journal = self._journal_dir()
         if fs is None:
             raise LookupError(f"ledger table {self.table} does not exist")
+        local = fs.getScheme() == "file"
+        if local:
+            # the checksummed local FileSystem's stream is not Syncable:
+            # its hsync only flushes; the raw one's syncs the descriptor
+            fs = fs.getRawFileSystem()
         staged = self._path(journal, f".tmp-{uuid.uuid4().hex}")
         entry = self._path(journal, _entry_name(name))
         out = fs.create(staged, False)
@@ -321,6 +347,8 @@ class CatalogLedger(Ledger):
             fs.delete(staged, False)
             if not fs.exists(entry):
                 raise OSError(f"could not commit ledger journal entry {entry}")
+        if local:
+            _fsync_dir(journal.toUri().getPath())
         if self._journal is not None:
             self._journal[entry.getName()] = name
 
@@ -410,11 +438,6 @@ class FileLedger(Ledger):
                 names.append(f.read())
         return names
 
-    def applied_df(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(n,) for n in self._entries()], "migration string"
-        )
-
     def applied(self) -> set[str]:
         return set(self._entries())
 
@@ -436,22 +459,7 @@ class FileLedger(Ledger):
             finally:
                 raise
         os.rename(staged, committed)  # COMMIT POINT (atomic)
-        # The rename is atomic but not durable until the DIRECTORY entry
-        # is on disk — without this fsync a power failure after record()
-        # returns can roll back the commit (POSIX makes no ordering
-        # promise for metadata). Best-effort on filesystems that reject
-        # directory fsync (some network mounts): the atomicity guarantee
-        # stands either way, only crash-durability degrades.
-        try:
-            dfd = os.open(self.path, os.O_RDONLY)
-        except OSError:
-            return
-        try:
-            os.fsync(dfd)
-        except OSError:
-            pass
-        finally:
-            os.close(dfd)
+        _fsync_dir(self.path)
 
 
 class JdbcLedger(Ledger):
@@ -495,15 +503,6 @@ class JdbcLedger(Ledger):
                 finally:
                     rs.close()
             return False
-
-    def applied_df(self) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        # case-normalize: some DBMSes (Derby, Oracle) uppercase unquoted
-        # identifiers; resolution is case-insensitive but output isn't
-        return self.spark.read.jdbc(self.url, self.table, properties=self.properties).select(
-            F.col("migration").alias("migration")
-        )
 
     def _column(self, conn) -> str:
         """The ledger column, quoted as the table spells it: DBMSes fold

@@ -3,7 +3,7 @@
 The reference's actual deployment shape is 'migrations + ledger live in
 the target RDBMS over the database handle' (Core.pm:259-272). q68 runs
 that whole plane — pass-through DDL, subprocess-free SQL migrations,
-ledger INSERTs over JDBC, ledger read-back via spark.read.jdbc — against
+ledger INSERTs over JDBC, ledger read-back with one ``SELECT`` — against
 an embedded Derby database and hash-matches the resulting ledger against
 its statically-known contents, giving E20 a hard CORRECTNESS row instead
 of pytest-only coverage.
@@ -62,9 +62,10 @@ def _write_fixture(base: str) -> str:
 def q68_jdbc_ledger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E20 round-trip through embedded Derby: run a two-migration fixture
     with JdbcMigrator (pass-through DDL incl. a real CREATE INDEX, ledger
-    INSERTs over JDBC), then read the ledger back with spark.read.jdbc.
-    The ledger's contents are exactly the migration names, so the result
-    hash-matches a static VALUES oracle. A fresh temp Derby database per
+    INSERTs over JDBC), then read the ledger back through
+    ``JdbcLedger.applied()``, one ``SELECT``, as a DataFrame. The ledger's
+    contents are exactly the migration names, so the result hash-matches
+    a static VALUES oracle. A fresh temp Derby database per
     invocation keeps the query deterministic and re-runnable."""
     from database_migrator_spark.migrator.jdbc import JdbcMigrator
 

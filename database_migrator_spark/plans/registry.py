@@ -115,9 +115,10 @@ def query(
 #      without displacing a pinned row.
 # Post-r15 instance: EMPTY.  Only migrator/ has changed since the r15
 # gate (the driver-side pending set, the one DDL lexer, the journalled
-# catalog ledger), and the declared queries on that path still return
-# the same rows: q68 (operators/jdbcops.py, through JdbcMigrator and
-# JdbcLedger.record) reads back the same ledger names, and q167
+# catalog ledger, one ledger read per backend), and the declared queries
+# on that path still return the same rows: q68 (operators/jdbcops.py,
+# through JdbcMigrator, JdbcLedger.record and JdbcLedger.applied) reads
+# back the same ledger names, and q167
 # (streaming/sinks.py, through run_ddl_script_jdbc) the same aggregates;
 # both pass tests/test_oracle.py.  (The r14 wave — q304 dead split year,
 # the 7 degeneracy-audit queries, the 5 BM25 Lucene-idf resets — is

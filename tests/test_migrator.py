@@ -582,6 +582,37 @@ def test_catalog_ledger_record_runs_no_spark_job(spark, tree):
         m.drop_database()
 
 
+def test_catalog_journal_commit_is_durable_on_local_disk(spark, tree, monkeypatch):
+    """On a ``file:`` table location the journal entry is written through
+    the raw local FileSystem, whose stream syncs on ``hsync`` (the
+    checksummed one's only flushes, and leaves a ``.crc`` sidecar), and
+    the journal directory is synced after the rename."""
+    from database_migrator_spark.migrator import ledger as ledger_mod
+
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        m.create_or_update_database()
+        synced = []
+        # raising=False: without the helper the assertions below say what is missing
+        monkeypatch.setattr(ledger_mod, "_fsync_dir", synced.append, raising=False)
+        m.ledger.record("03-third")
+        journal = os.path.join(_ledger_dir(spark, db), "_migrator_journal")
+        assert os.listdir(journal) == [ledger_mod._entry_name("03-third")]
+        assert synced == [journal]
+        # the premise: the raw FileSystem's stream is Syncable
+        fs, path = m.ledger._journal_dir()
+        probe = m.ledger._path(path, ".probe")
+        out = fs.getRawFileSystem().create(probe, False)
+        try:
+            assert out.hasCapability("hsync")
+        finally:
+            out.close()
+            fs.delete(probe, False)
+    finally:
+        m.drop_database()
+
+
 def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
     """Two migrations into an empty ledger table: the records run no job
     and the compaction one INSERT; the table is one file and the journal

@@ -1,24 +1,36 @@
-"""CLI-surface tests: the option list is DERIVED from
-``core.CLI_ATTRIBUTES`` (the engine's MooseX::Getopt::Dashes equivalent —
-underscore attribute → dashed flag), so these pin (a) the derivation
-rule, (b) the ``--user`` alias, and (c) the argument-validation exits,
-all parse-only (no Spark session)."""
+"""CLI-surface tests: the parser declares exactly the flags ``main``
+reads, with the reference's dashed spelling (MooseX::Getopt::Dashes), the
+``--user`` alias and the argument-validation exits. All run without a
+Spark session."""
 
 from __future__ import annotations
 
 import pytest
 
+from database_migrator_spark.migrator import cli
 from database_migrator_spark.migrator.cli import build_parser, main
-from database_migrator_spark.migrator.core import CLI_ATTRIBUTES, REQUIRED
+
+FLAGS = {
+    "--database",
+    "--migrations-dir",
+    "--schema-file",
+    "--migration-table",
+    "--username",
+    "--user",
+    "--password",
+    "--dry-run",
+    "--quiet",
+    "--verbose",
+    "--jdbc-url",
+    "--ledger-dir",
+    "--legacy-sql-match",
+}
 
 
-def test_every_attribute_row_is_a_dashed_flag():
-    p = build_parser()
-    opts = {s for a in p._actions for s in a.option_strings}
-    for attr, _kind, _default, _help, aliases in CLI_ATTRIBUTES:
-        assert "--" + attr.replace("_", "-") in opts
-        for alias in aliases:
-            assert "--" + alias.replace("_", "-") in opts
+def test_parser_declares_exactly_the_flags_main_reads():
+    opts = {s for a in build_parser()._actions for s in a.option_strings}
+    # no --host / --port: a JDBC URL carries both
+    assert opts - {"-h", "--help"} == FLAGS
 
 
 def test_parse_round_trips_attribute_values():
@@ -31,18 +43,28 @@ def test_parse_round_trips_attribute_values():
             "--migration-table", "ledger",
             "--username", "u",
             "--password", "pw",
-            "--host", "h",
-            "--port", "1527",
+            "--jdbc-url", "jdbc:derby:x",
+            "--ledger-dir", "/tmp/l",
             "--dry-run",
             "--verbose",
+            "--legacy-sql-match",
         ]
     )
-    for attr, kind, _default, _help, _aliases in CLI_ATTRIBUTES:
-        got = getattr(args, attr)  # derivation guarantees the dest exists
-        if kind == "flag":
-            assert got is (attr in ("dry_run", "verbose"))
-    assert args.username == "u" and args.migration_table == "ledger"
-    assert args.host == "h" and args.port == "1527"
+    assert vars(args) == {
+        "verb": "plan",
+        "database": "d1",
+        "migrations_dir": "/tmp/m",
+        "schema_file": "/tmp/s.sql",
+        "migration_table": "ledger",
+        "username": "u",
+        "password": "pw",
+        "jdbc_url": "jdbc:derby:x",
+        "ledger_dir": "/tmp/l",
+        "dry_run": True,
+        "quiet": False,
+        "verbose": True,
+        "legacy_sql_match": True,
+    }
 
 
 def test_user_is_an_alias_for_username():
@@ -53,12 +75,24 @@ def test_user_is_an_alias_for_username():
 
 
 def test_required_attrs_enforced_and_defaults_applied():
-    required = {a for a, _k, d, _h, _al in CLI_ATTRIBUTES if d is REQUIRED}
-    assert required == {"migrations_dir"}
     with pytest.raises(SystemExit):
         build_parser().parse_args(["plan", "--database", "d"])  # no --migrations-dir
-    args = build_parser().parse_args(["plan", "--database", "d", "--migrations-dir", "/m"])
-    assert args.migration_table == "applied_migration"
+    args = build_parser().parse_args(["plan", "--migrations-dir", "/m"])
+    assert vars(args) == {
+        "verb": "plan",
+        "database": None,
+        "migrations_dir": "/m",
+        "schema_file": None,
+        "migration_table": "applied_migration",
+        "username": None,
+        "password": None,
+        "jdbc_url": None,
+        "ledger_dir": None,
+        "dry_run": False,
+        "quiet": False,
+        "verbose": False,
+        "legacy_sql_match": False,
+    }
 
 
 def test_quiet_verbose_mutually_exclusive_exit_2(capsys):
@@ -75,3 +109,24 @@ def test_exactly_one_target_required_exit_2(capsys):
         ["plan", "--migrations-dir", "/m", "--database", "d", "--jdbc-url", "jdbc:derby:x"]
     )
     assert rc == 2
+
+
+def test_missing_paths_exit_1_before_the_session(tmp_path, monkeypatch, capsys):
+    """A mistyped path fails before a Spark session is asked for."""
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("the session was started before the paths were checked")
+
+    monkeypatch.setattr(cli, "get_session", no_session)
+    missing = str(tmp_path / "no-such-dir")
+    rc = main(["migrate", "--database", "d", "--migrations-dir", missing])
+    assert rc == 1
+    assert f"migrations dir not found: {missing}" in capsys.readouterr().err
+
+    missing = str(tmp_path / "no-such.sql")
+    rc = main(
+        ["migrate", "--jdbc-url", "jdbc:derby:x", "--migrations-dir", str(tmp_path),
+         "--schema-file", missing]
+    )
+    assert rc == 1
+    assert f"schema file not found: {missing}" in capsys.readouterr().err
