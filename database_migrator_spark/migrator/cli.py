@@ -14,6 +14,8 @@ import argparse
 import os
 import sys
 
+from pyspark.sql import SparkSession
+
 from database_migrator_spark.session import get_session
 
 from .core import Migrator
@@ -66,9 +68,14 @@ def main(argv: list[str] | None = None) -> int:
     if args.schema_file and not os.path.isfile(args.schema_file):
         print(f"error: schema file not found: {args.schema_file}", file=sys.stderr)
         return 1
-    # a Spark database outlives this process in the persistent catalog; a
-    # JDBC target keeps its tables in the target
-    spark = get_session("spark-migrate", persistent_catalog=not args.jdbc_url)
+    # a caller's session is used as it is: building through get_session
+    # would re-apply its builder options (time zone, shuffle partitions,
+    # AQE, Arrow) to it. Without one, a Spark database outlives this
+    # process in the persistent catalog; a JDBC target keeps its tables in
+    # the target
+    spark = SparkSession.getActiveSession() or get_session(
+        "spark-migrate", persistent_catalog=not args.jdbc_url
+    )
     common = dict(
         migrations_dir=args.migrations_dir,
         schema_file=args.schema_file,

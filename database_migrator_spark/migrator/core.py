@@ -12,12 +12,16 @@ set arithmetic it does. The ledger read runs none either: the driver
 reads a plain parquet catalog ledger's files itself, the JDBC ledger is
 one ``SELECT`` and the FileLedger its entries; only a catalog ledger of
 another shape (a provider other than parquet, partitions, ``CHAR(n)``)
-is read by a Spark job. So a no-op deploy runs no Spark job unless the
-ledger table holds more than one data file, which it then folds into
-one (see ledger.py). Everything else is ordered driver-side
-orchestration — deliberately so: migrations are sequential by contract
-(Core.pm:158-162), so the loop must never be parallelized across
-migrations.
+is read by a Spark job. The database probe of a deploy is the default
+ledger's own catalog lookup: a ledger table found in the database shows
+the database exists, and the pending set reads the ledger without
+looking it up again. So a no-op deploy over a catalog ledger at a
+``file:`` location makes one metastore call (``getTable``), no JVM
+file-system call and no Spark job; a one-column ledger left in many
+files, or with a name twice, is folded into one file on the driver too
+(see ledger.py). Everything else is ordered driver-side orchestration —
+deliberately so: migrations are sequential by contract (Core.pm:158-162),
+so the loop must never be parallelized across migrations.
 
 The reference runs each statement over one open handle (Core.pm:176-179);
 here each statement is a Spark job on a session sized for analytics, where
@@ -92,6 +96,11 @@ class Migrator:
         self.legacy_sql_match = legacy_sql_match
         self.logger = logger or self._build_logger()
         self._ledger = ledger
+        # the default ledger is a table in the database itself
+        self._ledger_in_database = ledger is None
+        # set when the database probe's ledger lookup found the table, for
+        # the pending read that follows it (see create_or_update_database)
+        self._ledger_found = False
 
     # -- logging (Core.pm:237-250) ----------------------------------------
     def _build_logger(self) -> logging.Logger:
@@ -127,8 +136,10 @@ class Migrator:
             for e in os.scandir(self.migrations_dir)
             if e.is_dir() and not e.name.startswith(".")  # Core.pm:232-233
         }
-        # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162)
-        if self.ledger.exists():
+        # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162); a lookup
+        # the database probe just made and that found it is not repeated
+        found, self._ledger_found = self._ledger_found, False
+        if found or self.ledger.exists():
             names -= self.ledger.applied()
         return [
             scan_migration(os.path.join(self.migrations_dir, n), self.legacy_sql_match)
@@ -203,6 +214,13 @@ class Migrator:
         self.__dict__["_database_exists"] = True
 
     def create_or_update_database(self) -> None:
+        if self._ledger_in_database and "_database_exists" not in self.__dict__:
+            # a ledger table found in the database shows the database
+            # exists: the lookup is the whole probe, one metastore call,
+            # where databaseExists makes its own (three on the Hive catalog)
+            self._ledger_found = self.ledger.exists()
+            if self._ledger_found:
+                self.__dict__["_database_exists"] = True
         creating = not self._database_exists
         if creating:
             self.logger.info("creating database %s", self.database)
@@ -225,6 +243,7 @@ class Migrator:
     def drop_database(self) -> None:  # test harness support (Core.pm:29)
         self.spark.sql(f"DROP DATABASE IF EXISTS `{self.database}` CASCADE")
         self.__dict__.pop("_database_exists", None)  # _in_database trusts the memo
+        self._ledger_found = False
 
     # -- apply loop: strictly ordered (Core.pm:158-162) -----------------------
     def _run_migrations(self, pending: list[Migration]) -> None:

@@ -217,6 +217,16 @@ def _write_parquet(path, names, column="migration", **extra):
     pq.write_table(pa.table(cols), str(path))
 
 
+@pytest.fixture()
+def hadoop_fs(monkeypatch):
+    """Switch off the driver's own route to a ``file:`` ledger table's
+    files, so its Hadoop FileSystem carries every file operation, as it
+    does at any other location."""
+    from database_migrator_spark.migrator import ledger as ledger_mod
+
+    monkeypatch.setattr(ledger_mod, "_local_path", lambda location: None)
+
+
 # the ledger table as a schema creates it, and how another writer adds one
 # row to it: a parquet table the driver reads, a JSON one Spark reads
 STALE_READ_LEDGERS = {
@@ -276,6 +286,33 @@ def test_no_op_deploy_folds_a_many_file_ledger(spark, tmp_path):
         m.drop_database()
 
 
+@pytest.mark.parametrize("layout", ["one-file", "two-files"])
+def test_no_op_deploy_heals_doubled_ledger_rows(spark, tmp_path, layout):
+    """A crash between a fold's write and its deletes leaves every row
+    twice, in two files; a file may also hold a name twice. The next
+    deploy of a one-column ledger, a no-op one too, writes each name
+    once, in one file."""
+    names = [f"{i:02d}-m" for i in range(1, 4)]
+    for n in names:
+        (tmp_path / "migrations" / n).mkdir(parents=True)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db}")
+    m = _migrator(spark, tmp_path, database=db)
+    try:
+        spark.sql(f"CREATE TABLE {db}.applied_migration (migration STRING)")
+        path = Path(_ledger_dir(spark, db))
+        if layout == "one-file":
+            _write_parquet(path / "part-a.parquet", names + names)
+        else:
+            _write_parquet(path / "part-a.parquet", names)
+            _write_parquet(path / "part-b.parquet", names)
+        m.create_or_update_database()
+        assert len(_data_files_on_disk(spark, db)) == 1
+        assert _ledger_rows(spark, db) == [(n,) for n in names]
+    finally:
+        m.drop_database()
+
+
 # -- the driver's read of a parquet ledger against Spark's -------------------
 def _spark_names(spark, table):
     spark.catalog.refreshTable(table)
@@ -306,9 +343,7 @@ def parquet_ledger(spark):
     spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
-@given(st.lists(_LEDGER_FILE, max_size=5))
-@settings(max_examples=25, deadline=None)
-def test_driver_read_equals_spark_read(spark, parquet_ledger, files):
+def _check_driver_read(spark, db, files):
     """The driver's read of a parquet ledger yields Spark's set of names,
     runs no Spark job and skips what Spark's file index skips: ``_`` and
     ``.`` files, empty files and the journal directory."""
@@ -316,7 +351,6 @@ def test_driver_read_equals_spark_read(spark, parquet_ledger, files):
 
     from database_migrator_spark.migrator.ledger import CatalogLedger
 
-    db = parquet_ledger
     table = f"{db}.applied_migration"
     path = Path(_ledger_dir(spark, db))
     shutil.rmtree(path)
@@ -334,6 +368,23 @@ def test_driver_read_equals_spark_read(spark, parquet_ledger, files):
     assert jobs == 0
     assert applied == _spark_names(spark, table) | {"99-journaled"}
     assert applied == {n for _, names, _ in files for n in names} | {"99-journaled"}
+
+
+@given(st.lists(_LEDGER_FILE, max_size=5))
+@settings(max_examples=25, deadline=None)
+def test_driver_read_equals_spark_read(spark, parquet_ledger, files):
+    _check_driver_read(spark, parquet_ledger, files)
+
+
+@given(st.lists(_LEDGER_FILE, max_size=5))
+@settings(max_examples=10, deadline=None)
+def test_driver_read_over_hadoop_fs_equals_spark_read(spark, parquet_ledger, files):
+    """The same read through the table's Hadoop FileSystem."""
+    from database_migrator_spark.migrator import ledger as ledger_mod
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ledger_mod, "_local_path", lambda location: None)
+        _check_driver_read(spark, parquet_ledger, files)
 
 
 def _subdirectory(path):
@@ -562,8 +613,56 @@ def test_crash_between_compacted_write_and_deletes(spark, extra_column_tree, mon
         m.drop_database()
 
 
+def test_a_name_longer_than_the_varchar_column_fails_as_spark_insert_fails(spark, tree):
+    """The driver writes no name a ``VARCHAR(n)`` ledger column cannot
+    hold: Spark's INSERT gets it and fails with ``EXCEED_LIMIT_LENGTH``.
+    The migration has run and sits in the journal, so readers see it and
+    it does not run again."""
+    from pyspark.errors import SparkRuntimeException
+
+    (tree / "schema.sql").write_text("CREATE TABLE applied_migration (migration VARCHAR(10));\n")
+    (tree / "migrations" / "03-longer-than-ten").mkdir()
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    try:
+        with pytest.raises(SparkRuntimeException) as err:
+            m.create_or_update_database()
+        assert err.value.getCondition() == "EXCEED_LIMIT_LENGTH"
+        assert _ledger_names(spark, db) == []
+        assert sorted(_journal_on_disk(spark, db).values()) == [
+            "01-first", "02-second", "03-longer-than-ten"
+        ]
+        assert _migrator(spark, tree, database=db).pending_migrations() == []
+    finally:
+        m.drop_database()
+
+
+def test_fold_deletes_each_data_file_with_its_crc_sidecar(spark, tree):
+    """Spark writes a ``.<file>.crc`` sidecar beside each data file; the
+    fold deletes the sidecar with its file, as Hadoop's checksummed
+    FileSystem does, so none is left without its file."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db}")
+    m = _migrator(spark, tree, database=db)
+    try:
+        spark.sql(f"CREATE TABLE {db}.applied_migration (migration STRING)")
+        spark.sql(f"INSERT INTO {db}.applied_migration VALUES ('00-seed')")
+        (tree / "migrations" / "00-seed").mkdir()
+        path = _ledger_dir(spark, db)
+        [seed] = _data_files_on_disk(spark, db)
+        assert os.path.exists(os.path.join(path, f".{seed}.crc"))
+        m.create_or_update_database()
+        assert _ledger_names(spark, db) == ["00-seed", "01-first", "02-second"]
+        [data] = _data_files_on_disk(spark, db)
+        assert data != seed
+        sidecars = [f for f in os.listdir(path) if f.endswith(".crc")]
+        assert all(os.path.exists(os.path.join(path, f[1:-4])) for f in sidecars)
+    finally:
+        m.drop_database()
+
+
 # -- catalog ledger journal ---------------------------------------------------
-def test_catalog_ledger_record_runs_no_spark_job(spark, tree):
+def _check_record_runs_no_spark_job(spark, tree):
     """A record is a journal commit on the driver: no Spark job, visible to
     both readers at once, and a retry finds the same entry."""
     db = f"migtest_{uuid.uuid4().hex[:8]}"
@@ -582,11 +681,19 @@ def test_catalog_ledger_record_runs_no_spark_job(spark, tree):
         m.drop_database()
 
 
+def test_catalog_ledger_record_runs_no_spark_job(spark, tree):
+    _check_record_runs_no_spark_job(spark, tree)
+
+
+def test_catalog_ledger_record_over_hadoop_fs_runs_no_spark_job(spark, tree, hadoop_fs):
+    _check_record_runs_no_spark_job(spark, tree)
+
+
 def test_catalog_journal_commit_is_durable_on_local_disk(spark, tree, monkeypatch):
-    """On a ``file:`` table location the journal entry is written through
-    the raw local FileSystem, whose stream syncs on ``hsync`` (the
-    checksummed one's only flushes, and leaves a ``.crc`` sidecar), and
-    the journal directory is synced after the rename."""
+    """On a ``file:`` table location the driver commits the journal entry
+    as FileLedger commits its own: it fsyncs the entry under its staging
+    name, renames it, then fsyncs the journal directory; no ``.crc``
+    sidecar is written."""
     from database_migrator_spark.migrator import ledger as ledger_mod
 
     db = f"migtest_{uuid.uuid4().hex[:8]}"
@@ -594,29 +701,29 @@ def test_catalog_journal_commit_is_durable_on_local_disk(spark, tree, monkeypatc
     try:
         m.create_or_update_database()
         synced = []
-        # raising=False: without the helper the assertions below say what is missing
-        monkeypatch.setattr(ledger_mod, "_fsync_dir", synced.append, raising=False)
+        real_fsync = os.fsync
+
+        def fsync(fd):
+            synced.append(os.path.realpath(f"/proc/self/fd/{fd}"))
+            return real_fsync(fd)
+
+        monkeypatch.setattr(os, "fsync", fsync)
         m.ledger.record("03-third")
-        journal = os.path.join(_ledger_dir(spark, db), "_migrator_journal")
+        monkeypatch.undo()
+        journal = os.path.realpath(os.path.join(_ledger_dir(spark, db), "_migrator_journal"))
         assert os.listdir(journal) == [ledger_mod._entry_name("03-third")]
-        assert synced == [journal]
-        # the premise: the raw FileSystem's stream is Syncable
-        fs, path = m.ledger._journal_dir()
-        probe = m.ledger._path(path, ".probe")
-        out = fs.getRawFileSystem().create(probe, False)
-        try:
-            assert out.hasCapability("hsync")
-        finally:
-            out.close()
-            fs.delete(probe, False)
+        assert len(synced) == 2
+        staged, directory = synced
+        assert os.path.dirname(staged) == journal
+        assert os.path.basename(staged).startswith(".tmp-")
+        assert directory == journal
     finally:
         m.drop_database()
 
 
-def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
-    """Two migrations into an empty ledger table: the records run no job
-    and the compaction one INSERT; the table is one file and the journal
-    is empty afterwards."""
+def _ledger_jobs(spark, monkeypatch) -> list[int]:
+    """The Spark jobs each ledger ``record`` and ``compact`` call runs,
+    filled in as they run."""
     from database_migrator_spark.migrator.ledger import CatalogLedger
 
     jobs = []
@@ -627,11 +734,20 @@ def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
             jobs.append(_jobs_run_by(spark, lambda: _real(self, *args)))
 
         monkeypatch.setattr(CatalogLedger, method, counted)
+    return jobs
+
+
+def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
+    """Two migrations into an empty one-column ledger table: the records
+    and the driver's fold run no Spark job; the table is one file and the
+    journal is empty afterwards."""
+    jobs = _ledger_jobs(spark, monkeypatch)
     db = f"migtest_{uuid.uuid4().hex[:8]}"
     m = _migrator(spark, tree, database=db)
     try:
         m.create_or_update_database()
-        assert sum(jobs) == 1
+        assert len(jobs) == 3
+        assert sum(jobs) == 0
         assert _ledger_names(spark, db) == ["01-first", "02-second"]
         assert len(_data_files_on_disk(spark, db)) == 1
         assert _journal_on_disk(spark, db) == {}
@@ -639,9 +755,28 @@ def test_deploy_runs_one_ledger_insert_job(spark, tree, monkeypatch):
         m.drop_database()
 
 
+def test_deploy_with_a_user_column_runs_one_insert_and_one_fold_job(
+    spark, extra_column_tree, monkeypatch
+):
+    """A ledger with a user column keeps Spark's fold: one named-column
+    INSERT of the journal names, then one job folding the seed row's file
+    and the INSERT's into one."""
+    jobs = _ledger_jobs(spark, monkeypatch)
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, extra_column_tree, database=db)
+    try:
+        m.create_or_update_database()
+        assert jobs == [0, 0, 2]
+        assert len(_data_files_on_disk(spark, db)) == 1
+        assert _journal_on_disk(spark, db) == {}
+    finally:
+        m.drop_database()
+
+
 def test_no_op_deploy_probes_neither_table_nor_database_again(spark, tree, monkeypatch):
-    """The ledger's existence comes from its one catalog lookup, and the
-    database is probed once per deploy, not once per file run in it."""
+    """The ledger's existence comes from its one catalog lookup, which on
+    a deploy that finds the table also shows the database exists: the
+    bootstrap probes the database once, the no-op deploy not at all."""
     from pyspark.sql.catalog import Catalog
 
     probes = []
@@ -663,7 +798,7 @@ def test_no_op_deploy_probes_neither_table_nor_database_again(spark, tree, monke
         m.create_or_update_database()  # schema + two migrations
         assert probes == [db]
         _migrator(spark, tree, database=db).create_or_update_database()
-        assert probes == [db, db]
+        assert probes == [db]
     finally:
         monkeypatch.undo()
         m.drop_database()
@@ -685,6 +820,21 @@ def _crash_at_ledger_insert(db, monkeypatch, after: bool):
     monkeypatch.setattr(SparkSession, "sql", sql)
 
 
+def _crash_at_fold_rename(monkeypatch, after: bool):
+    """Make the rename that commits the driver fold's parquet file raise,
+    before it runs or after."""
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if dst.endswith(".parquet"):
+            if after:
+                real_rename(src, dst)
+            raise RuntimeError("simulated crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
 def _assert_recovers(spark, tree, db):
     """The next deploy applies nothing (a second CREATE TABLE bar would
     fail), and afterwards the ledger table holds the tree once, in one
@@ -698,39 +848,92 @@ def _assert_recovers(spark, tree, db):
     assert _journal_on_disk(spark, db) == {}
 
 
-def test_crash_between_journal_commit_and_table_insert(spark, tree, monkeypatch):
-    """The journal entries are deleted only after the INSERT: a crash at
-    the INSERT leaves the names in the journal, where readers see them."""
-    db = f"migtest_{uuid.uuid4().hex[:8]}"
+def _crash_and_recover(spark, tree, db, crash, table_after_crash):
+    """Deploy ``tree`` into ``db`` with ``crash`` armed; check the crashed
+    deploy left the ledger table holding ``table_after_crash`` and the
+    journal the tree's migrations; then check the next deploy recovers."""
     m = _migrator(spark, tree, database=db)
     try:
-        _crash_at_ledger_insert(db, monkeypatch, after=False)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            m.create_or_update_database()
-        monkeypatch.undo()
-        assert _ledger_names(spark, db) == []
-        assert sorted(_journal_on_disk(spark, db).values()) == ["01-first", "02-second"]
-        _assert_recovers(spark, tree, db)
-    finally:
-        m.drop_database()
-
-
-def test_crash_between_table_insert_and_journal_deletes(spark, tree, monkeypatch):
-    """Names in both places after a crash: the next deploy inserts only
-    the journal names the table lacks, so no row is doubled."""
-    db = f"migtest_{uuid.uuid4().hex[:8]}"
-    m = _migrator(spark, tree, database=db)
-    try:
-        _crash_at_ledger_insert(db, monkeypatch, after=True)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            m.create_or_update_database()
-        monkeypatch.undo()
+        with pytest.MonkeyPatch.context() as mp:
+            crash(mp)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                m.create_or_update_database()
         spark.catalog.refreshTable(f"{db}.applied_migration")
-        assert _ledger_names(spark, db) == ["01-first", "02-second"]
+        assert _ledger_names(spark, db) == table_after_crash
         assert sorted(_journal_on_disk(spark, db).values()) == ["01-first", "02-second"]
         _assert_recovers(spark, tree, db)
     finally:
         m.drop_database()
+
+
+def test_crash_between_journal_commit_and_table_insert(spark, tree):
+    """The journal entries are deleted only after the driver fold's file
+    is committed: a crash before its rename leaves the names in the
+    journal, where readers see them, and the file a dot-file."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    _crash_and_recover(spark, tree, db, lambda mp: _crash_at_fold_rename(mp, after=False), [])
+
+
+def test_crash_between_table_insert_and_journal_deletes(spark, tree):
+    """Names in both places after a crash right after the fold's rename:
+    readers take the set, and the next deploy writes each name once."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    both = ["01-first", "02-second"]
+    _crash_and_recover(spark, tree, db, lambda mp: _crash_at_fold_rename(mp, after=True), both)
+
+
+def test_crash_between_journal_and_data_file_deletes(spark, tree):
+    """A crash after the fold deleted the journal but before it deleted
+    the data files it read leaves every row twice; the next deploy, a
+    no-op, writes each name once and deletes the rest."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    real_remove = os.remove
+
+    def remove(path):
+        if path.endswith(".parquet"):
+            raise RuntimeError("simulated crash")
+        return real_remove(path)
+
+    try:
+        m.create_or_update_database()
+        (tree / "migrations" / "03-third").mkdir()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(os, "remove", remove)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                _migrator(spark, tree, database=db).create_or_update_database()
+        spark.catalog.refreshTable(f"{db}.applied_migration")
+        assert _ledger_names(spark, db) == [
+            "01-first", "01-first", "02-second", "02-second", "03-third"
+        ]
+        assert _journal_on_disk(spark, db) == {}
+        _assert_recovers(spark, tree, db)
+    finally:
+        m.drop_database()
+
+
+@pytest.mark.parametrize("after", [False, True], ids=["before", "after"])
+def test_crash_at_ledger_insert_over_hadoop_fs(spark, tree, hadoop_fs, after):
+    """Through the Hadoop FileSystem a one-column ledger takes Spark's
+    fold: a crash at its INSERT, before it runs or after, recovers as a
+    crash at the driver fold's rename does."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    table = ["01-first", "02-second"] if after else []
+    _crash_and_recover(
+        spark, tree, db, lambda mp: _crash_at_ledger_insert(db, mp, after=after), table
+    )
+
+
+@pytest.mark.parametrize("after", [False, True], ids=["before", "after"])
+def test_crash_at_ledger_insert_with_a_user_column(spark, extra_column_tree, after):
+    """A ledger with a user column takes Spark's fold: a crash at its
+    INSERT, before it runs or after, leaves the names in the journal, and
+    the next deploy inserts only those the table lacks."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    table = ["00-seed", "01-first", "02-second"] if after else ["00-seed"]
+    _crash_and_recover(
+        spark, extra_column_tree, db, lambda mp: _crash_at_ledger_insert(db, mp, after=after), table
+    )
 
 
 def test_failed_migration_keeps_earlier_records_in_the_table(spark, tree, monkeypatch):
@@ -945,16 +1148,16 @@ def test_one_database_switch_per_deploy_and_use_does_not_leak(spark, tree, monke
 
 
 HIVE_CALLS_SCRIPT = """
-import os, sys
 from database_migrator_spark.migrator.core import Migrator
 from database_migrator_spark.session import get_session
 
 spark = get_session("hive-client-calls", cpus=2, persistent_catalog=True)
 calls = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS()
 spark.catalog.databaseExists("default")  # the metastore's start-up calls stay out
-before = calls.getCount()
-Migrator(spark, "calls_db", "migrations", "schema.sql", quiet=True).create_or_update_database()
-print(calls.getCount() - before)
+for deploy in ("bootstrap", "no-op"):
+    before = calls.getCount()
+    Migrator(spark, "calls_db", "migrations", "schema.sql", quiet=True).create_or_update_database()
+    print(deploy, calls.getCount() - before)
 """
 
 # Hive client calls of the bootstrap below when every schema file and
@@ -963,34 +1166,47 @@ print(calls.getCount() - before)
 PER_FILE_SWITCH_CALLS = 152
 
 
-def test_bootstrap_hive_client_calls(tmp_path):
-    """On the Hive catalog a 6-migration bootstrap switches databases once
-    in and once out: at least 12 metastore calls fewer than switching
-    around the schema and each migration. The Hive catalog is fixed when
-    a JVM starts, so this runs in its own process."""
+@pytest.fixture(scope="module")
+def hive_client_calls(tmp_path_factory):
+    """Hive client calls of a 6-migration bootstrap and of the no-op
+    deploy after it, each by a fresh ``Migrator``. The Hive catalog is
+    fixed when a JVM starts, so they run in a process of their own."""
     import subprocess
     import sys
-    from pathlib import Path
 
-    (tmp_path / "schema.sql").write_text(
+    root = tmp_path_factory.mktemp("hive-calls")
+    (root / "schema.sql").write_text(
         "CREATE TABLE applied_migration (migration VARCHAR(250) PRIMARY KEY);\n"
     )
     for i in range(1, 7):
-        d = tmp_path / "migrations" / f"{i:02d}-m"
+        d = root / "migrations" / f"{i:02d}-m"
         d.mkdir(parents=True)
         (d / "01.sql").write_text(f"CREATE TABLE t{i} (x INT);\nINSERT INTO t{i} VALUES (1), (2);\n")
     env = dict(
         os.environ,
         PYTHONPATH=str(Path(__file__).resolve().parent.parent),
         SPARK_GRAFT_DRIVER_MEM="1g",
-        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+        SPARK_LOCAL_DIRS=str(root / "local"),
     )
     out = subprocess.run(
         [sys.executable, "-c", HIVE_CALLS_SCRIPT],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600, check=True,
+        cwd=root, env=env, capture_output=True, text=True, timeout=600, check=True,
     )
-    calls = int(out.stdout.split()[-1])
-    assert calls <= PER_FILE_SWITCH_CALLS - 12
+    return {k: int(v) for k, v in (line.split() for line in out.stdout.splitlines()[-2:])}
+
+
+def test_bootstrap_hive_client_calls(hive_client_calls):
+    """On the Hive catalog a 6-migration bootstrap switches databases once
+    in and once out: at least 12 metastore calls fewer than switching
+    around the schema and each migration."""
+    assert hive_client_calls["bootstrap"] <= PER_FILE_SWITCH_CALLS - 12
+
+
+def test_no_op_deploy_makes_one_hive_client_call(hive_client_calls):
+    """A no-op deploy on the Hive catalog makes one metastore call, the
+    ledger's ``getTable``, which also shows the database exists; the
+    ledger's files are read on the driver."""
+    assert hive_client_calls["no-op"] == 1
 
 
 def test_quiet_verbose_exclusive(spark, tree):

@@ -1,9 +1,11 @@
 """CLI-surface tests: the parser declares exactly the flags ``main``
 reads, with the reference's dashed spelling (MooseX::Getopt::Dashes), the
-``--user`` alias and the argument-validation exits. All run without a
-Spark session."""
+``--user`` alias and the argument-validation exits, which run without a
+Spark session; and that ``main`` leaves a caller's session as it is."""
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 
@@ -130,3 +132,30 @@ def test_missing_paths_exit_1_before_the_session(tmp_path, monkeypatch, capsys):
     )
     assert rc == 1
     assert f"schema file not found: {missing}" in capsys.readouterr().err
+
+
+def test_main_leaves_the_callers_session_as_it_is(spark, tmp_path):
+    """``main`` deploys on the caller's active session without building it
+    again, which would re-apply the builder's options to it: a time zone
+    and a shuffle partition count the caller set survive the deploy."""
+    (tmp_path / "schema.sql").write_text("CREATE TABLE applied_migration (migration STRING);\n")
+    mig = tmp_path / "migrations" / "01-first"
+    mig.mkdir(parents=True)
+    (mig / "01-t.sql").write_text("CREATE TABLE t (x INT);\n")
+    caller = {"spark.sql.session.timeZone": "America/Los_Angeles", "spark.sql.shuffle.partitions": "3"}
+    saved = {k: spark.conf.get(k) for k in caller}
+    db = f"clitest_{uuid.uuid4().hex[:8]}"
+    try:
+        for k, v in caller.items():
+            spark.conf.set(k, v)
+        rc = main(
+            ["migrate", "--database", db, "--migrations-dir", str(tmp_path / "migrations"),
+             "--schema-file", str(tmp_path / "schema.sql"), "--quiet"]
+        )
+        assert rc == 0
+        assert spark.catalog.tableExists(f"{db}.t")
+        assert {k: spark.conf.get(k) for k in caller} == caller
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
